@@ -296,7 +296,11 @@ class SparkEstimator:
         names = self.target_names_in_ if kind not in ("clusterer",) else ("cluster",)
         out = Output(tuple(names), dtype=dtype, nodata=nodata_output)
         if compile_expressions and callable(getattr(self.estimator, "to_spark_columns", None)):
-            return self._apply_compiled(ff, [out], features=features)
+            _require_fitted(self)  # before the name check: unfitted has no names
+            self._check_feature_names(
+                ff.features if isinstance(ff, FeatureFrame) else (features or self.feature_names_in_)
+            )
+            return self._apply_compiled(ff, [out], self.estimator.to_spark_columns, "predict", features=features)
         acc = None
         if check_output_for_nodata and out_nd_collidable(out):
             spark = (ff.df if isinstance(ff, FeatureFrame) else ff).sparkSession
@@ -307,73 +311,14 @@ class SparkEstimator:
             result._collision_acc = acc
         return result
 
-    def _apply_compiled(self, ff, outputs: list[Output], features=None) -> FeatureFrame:
-        """Expression-compiled scoring: the model emits Catalyst column
-        expressions, so prediction runs inside whole-stage codegen with
-        ZERO Python boundary. NoData semantics are identical to the
-        skip/scatter path — one when(mask, nodata).otherwise(expr) per
-        output replaces filter+UDF+union."""
-        import pyspark.sql.functions as F
-
-        _require_fitted(self)
-        if isinstance(ff, DataFrame):
-            ff = FeatureFrame.from_dataframe(ff, list(features or self.feature_names_in_))
-        self._check_feature_names(ff.features)
-        exprs = self.estimator.to_spark_columns(list(ff.features))
-        names = [n for o in outputs for n in o.names]
-        if len(exprs) != len(names):
-            raise ValueError(f"compiled {len(exprs)} expressions for {len(names)} outputs")
-        mask = ff.nodata_mask()
-        dtypes = [o.dtype for o in outputs for _ in o.names]
-        nodatas = [o.resolved_nodata() for o in outputs for _ in o.names]
-        passthrough = [c for c in ff.df.columns if c not in ff.features]
-        cols = [
-            F.when(mask, F.lit(nd)).otherwise(e).cast(dt).alias(n)
-            for e, n, dt, nd in zip(exprs, names, dtypes, nodatas)
-        ]
-        out_df = ff.df.select(*passthrough, *cols)
-        result = FeatureFrame(
-            df=out_df,
-            features=tuple(names),
-            # register the just-written sentinels (NaN -> None), exactly
-            # like the UDF path (ufunc.py) — with {} the masked rows
-            # would read as VALID downstream and a chained op would
-            # consume the sentinel as a real value
-            nodata_input={
-                n: (None if isinstance(nd, float) and np.isnan(nd) else nd)
-                for n, nd in zip(names, nodatas)
-            },
-            metadata=dict(ff.metadata),
-        )
-        result._append_history("predict:compiled")
-        return result
-
-    def predict_proba(self, ff, features=None, nodata_output=None, **kw) -> FeatureFrame:
-        _require_method(self.estimator, "predict_proba")
-        classes = getattr(self.estimator, "classes_", None)
-        if classes is None:
-            raise NotImplementedError("predict_proba requires fitted classes_")
-        names = tuple(f"proba_{c}" for c in classes)
-        out = Output(names, dtype="double", nodata=nodata_output)
-        return self._apply(ff, "predict_proba", [out], features=features, **kw)
-
-    def transform(self, ff, features=None, nodata_output=None, compile_expressions=True, **kw) -> FeatureFrame:
-        _require_method(self.estimator, "get_feature_names_out")
-        names = tuple(map(str, self.estimator.get_feature_names_out()))
-        out = Output(names, dtype="double", nodata=nodata_output)
-        if compile_expressions and callable(getattr(self.estimator, "transform_to_spark_columns", None)):
-            self._check_feature_names(
-                ff.features if isinstance(ff, FeatureFrame) else (features or self.feature_names_in_)
-            )
-            return self._apply_compiled_with(
-                ff, [out], self.estimator.transform_to_spark_columns, features=features
-            )
-        return self._apply(ff, "transform", [out], features=features, **kw)
-
-    def _apply_compiled_with(self, ff, outputs, compile_fn, features=None) -> FeatureFrame:
-        """_apply_compiled with an explicit expression factory (used by
-        transform/inverse_transform, which compile differently from
-        predict)."""
+    def _apply_compiled(self, ff, outputs: list[Output], compile_fn, op: str, features=None) -> FeatureFrame:
+        """Expression-compiled scoring: ``compile_fn(feature_cols)`` emits
+        Catalyst column expressions, so the model runs inside whole-stage
+        codegen with ZERO Python boundary. NoData semantics are identical
+        to the skip/scatter path — one when(mask, nodata).otherwise(expr)
+        per output replaces filter+UDF+union. Callers check feature
+        names first (inverse_transform's inputs are transformed columns,
+        so it skips that check)."""
         import pyspark.sql.functions as F
 
         _require_fitted(self)
@@ -394,16 +339,40 @@ class SparkEstimator:
         result = FeatureFrame(
             df=ff.df.select(*passthrough, *cols),
             features=tuple(names),
-            # same sentinel registration as the UDF path (see
-            # predict:compiled above)
+            # register the just-written sentinels (NaN -> None), exactly
+            # like the UDF path (ufunc.py) — with {} the masked rows
+            # would read as VALID downstream and a chained op would
+            # consume the sentinel as a real value
             nodata_input={
                 n: (None if isinstance(nd, float) and np.isnan(nd) else nd)
                 for n, nd in zip(names, nodatas)
             },
             metadata=dict(ff.metadata),
         )
-        result._append_history("transform:compiled")
+        result._append_history(f"{op}:compiled")
         return result
+
+    def predict_proba(self, ff, features=None, nodata_output=None, **kw) -> FeatureFrame:
+        _require_method(self.estimator, "predict_proba")
+        classes = getattr(self.estimator, "classes_", None)
+        if classes is None:
+            raise NotImplementedError("predict_proba requires fitted classes_")
+        names = tuple(f"proba_{c}" for c in classes)
+        out = Output(names, dtype="double", nodata=nodata_output)
+        return self._apply(ff, "predict_proba", [out], features=features, **kw)
+
+    def transform(self, ff, features=None, nodata_output=None, compile_expressions=True, **kw) -> FeatureFrame:
+        _require_method(self.estimator, "get_feature_names_out")
+        names = tuple(map(str, self.estimator.get_feature_names_out()))
+        out = Output(names, dtype="double", nodata=nodata_output)
+        if compile_expressions and callable(getattr(self.estimator, "transform_to_spark_columns", None)):
+            self._check_feature_names(
+                ff.features if isinstance(ff, FeatureFrame) else (features or self.feature_names_in_)
+            )
+            return self._apply_compiled(
+                ff, [out], self.estimator.transform_to_spark_columns, "transform", features=features
+            )
+        return self._apply(ff, "transform", [out], features=features, **kw)
 
     def inverse_transform(self, ff, features=None, nodata_output=None, compile_expressions=True, **kw) -> FeatureFrame:
         if self.feature_names_in_ is not None:
@@ -414,8 +383,8 @@ class SparkEstimator:
         if compile_expressions and callable(
             getattr(self.estimator, "inverse_transform_to_spark_columns", None)
         ):
-            return self._apply_compiled_with(
-                ff, [out], self.estimator.inverse_transform_to_spark_columns, features=features
+            return self._apply_compiled(
+                ff, [out], self.estimator.inverse_transform_to_spark_columns, "transform", features=features
             )
         # inverse input features are the TRANSFORMED columns, so skip the
         # fit-name check by clearing expectations for this call

@@ -56,10 +56,6 @@ def q50_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _distinct_tokens(col="text"):
-    return F.array_distinct(F.split(F.col(col), " "))
-
-
 def ppjoin_prefix_index(toks: DataFrame, threshold: float, carry: tuple = ()) -> DataFrame:
     """PPJoin prefix index, shared by q51 (self-join) and q122
     (asymmetric batch x corpus — operators/corpus.py).
@@ -212,6 +208,32 @@ def q51_jaccard_pairs(spark: SparkSession, sf_dir: str, threshold: float = 0.6) 
     )
 
 
+def minhash_candidates(sigs: DataFrame, n_tables: int) -> DataFrame:
+    """MinHash banding shared by both hash families (q52 xxhash64,
+    q150 md5-60bit): ``sigs`` has one row per doc with the per-table
+    signatures h0..h{n_tables-1}; a pair is a candidate when ANY table
+    agrees (OR-amplification). One self-join on (table, signature)
+    yields distinct slim (doc_a, doc_b) pairs, doc_a < doc_b, before
+    any distance math."""
+    bands = sigs.select(
+        "doc_id",
+        F.posexplode(
+            F.array(*[F.col(f"h{i}") for i in range(n_tables)])
+        ).alias("tbl", "h"),
+    )
+    a, b = bands.alias("a"), bands.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.tbl") == F.col("b.tbl"))
+            & (F.col("a.h") == F.col("b.h"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .distinct()
+    )
+
+
 def minhash_pairs(
     docs: DataFrame, threshold: float = 0.7, shingle: int = 3, n_tables: int = 3
 ) -> DataFrame:
@@ -226,11 +248,11 @@ def minhash_pairs(
     The banding runs as PURE column expressions end to end — table i's
     signature is min(xxhash64(shingle, i)) over the shingle set, the
     same one-minhash-per-table OR-amplification MinHashLSH(numHashTables
-    = n_tables) performs — replacing the round-3 MLlib formulation
-    (HashingTF + MinHashLSH.fit + approxSimilarityJoin). That path paid
-    an ML fit job, array->sparse-vector conversion, a pair-level
-    distinct over FULL rows (id + vector + hashes structs on both
-    sides), and a per-pair distance UDF; here candidates are slim
+    = n_tables) performs, without the MLlib formulation's
+    (HashingTF + MinHashLSH.fit + approxSimilarityJoin) ML fit job,
+    array->sparse-vector conversion, pair-level distinct over FULL rows
+    (id + vector + hashes structs on both sides) and per-pair distance
+    UDF. Candidates are slim
     (doc_a, doc_b) pairs deduped before any distance math, and the
     exact Jaccard verify (on the raw shingle sets — no HashingTF bucket
     aliasing) evaluates once per distinct candidate as a JVM
@@ -240,30 +262,19 @@ def minhash_pairs(
     instead of pairs of featurized rows."""
     # filter BEFORE shingling (q150's guard): a sub-`shingle`-word doc
     # would make element_at read past the array end — INVALID_ARRAY_INDEX
-    # under default ANSI mode. The old greatest(..., 1) floor forced at
-    # least one shingle index for exactly those docs; real crawl corpora
-    # contain 1-2 word documents even though the shipped testdata's
-    # 10-token minimum kept this latent. Sub-shingle docs have no
-    # k-shingles, so dropping them is the defined semantics (they can
-    # never band-collide), identical to the previous behavior on every
-    # doc the old code didn't crash on.
-    # r12 OPT (guide §4.1/§1.2): the in-array form evaluated every
-    # xxhash64 INTERPRETED — higher-order lambdas run outside
-    # whole-stage codegen, one boxed call per shingle for the 3-gram
-    # hash plus one per (shingle, table) for the salted minhashes —
-    # measured as the dominant cost of the query (the fingerprint
-    # lineage alone was ~2-4 s of q52's ~5 s at sf0.1). Exploding to
-    # rows puts the IDENTICAL xxhash64 expressions into codegen'd
-    # projections: shingle hash via two window leads over token
-    # position, table minhashes as plain min aggregates (min over
-    # duplicate shingles == min over distinct ones), shingle sets via
-    # collect_set (set-equal to array_distinct; only set ops consume
-    # them). One window shuffle of |tokens| skinny rows whose
-    # hash(doc_id) partitioning the groupBy then REUSES (no second
-    # exchange) — vs zero shuffles but interpreted eval before;
-    # measured ~5.5 -> ~3.2 s with byte-identical output (the hash
-    # calls are the same expressions, so bands and verify decisions
-    # cannot move; set-equality pinned by
+    # under default ANSI mode. Sub-shingle docs have no k-shingles, so
+    # dropping them is the defined semantics (they can never
+    # band-collide).
+    # Shingles are hashed on exploded ROWS, not inside array lambdas:
+    # higher-order lambdas run interpreted, outside whole-stage codegen,
+    # while these are the same xxhash64 expressions in codegen'd
+    # projections. Shingle hash via window leads over token position,
+    # table minhashes as plain min aggregates (min over duplicate
+    # shingles == min over distinct ones), shingle sets via collect_set
+    # (set-equal to array_distinct; only set ops consume them). The
+    # groupBy reuses the window's hash(doc_id) partitioning, so this is
+    # one shuffle of skinny token rows (set-equality with the in-array
+    # form pinned by
     # tests/test_fold_kernels.py::test_minhash_exploded_matches_in_array).
     tokens = docs.select("doc_id", F.split("text", " ").alias("words")).filter(
         F.size("words") >= shingle
@@ -281,9 +292,8 @@ def minhash_pairs(
     )
     # signature table: one grouped pass gives every per-table minhash
     # AND the distinct shingle set for the exact verify. EAGERLY
-    # materialized: feeds the band explode and both verify sides (the
-    # round-2 persist-before-self-join finding) — at cluster scale
-    # "checkpoint the signature table before self-joining it".
+    # materialized: it feeds the band explode and both verify sides,
+    # which would otherwise each recompute the shingling.
     toks = shared_lineage(
         sh_rows.groupBy("doc_id")
         .agg(
@@ -301,23 +311,7 @@ def minhash_pairs(
         )
     )
 
-    bands = toks.select(
-        "doc_id",
-        F.posexplode(
-            F.array(*[F.col(f"h{i}") for i in range(n_tables)])
-        ).alias("tbl", "h"),
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.tbl") == F.col("b.tbl"))
-            & (F.col("a.h") == F.col("b.h"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    candidates = minhash_candidates(toks, n_tables)
     ta = toks.select(
         F.col("doc_id").alias("doc_a"),
         F.col("shingles").alias("sh_a"),
@@ -429,15 +423,11 @@ def q150_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.explode(F.array_distinct(word_shingle_array(k))).alias("shingle"),
     )
-    # r12 OPT (guide §2.3/§2.4, the q52 shape): ONE grouped pass over
-    # the shingle rows computes every per-table signature (min over
-    # the identical md5-60bit expressions — min per (doc, tbl) of the
-    # exploded struct form equals min of each salted hash directly)
-    # AND the verify shingle set, replacing the 3x struct explode +
-    # second groupBy(doc_id, tbl) shuffle; the persisted table is the
-    # 1-row-per-doc signature table, not the exploded shingle rows.
-    # Oracle hash unchanged (same hash family, same sets — verified at
-    # sf0.001/0.01/0.1 this round).
+    # ONE grouped pass over the shingle rows computes every per-table
+    # signature (min of each salted md5-60bit hash, equal to the
+    # oracle's min per (doc, tbl)) AND the verify shingle set; the
+    # persisted table is the 1-row-per-doc signature table, not the
+    # exploded shingle rows.
     toks = shared_lineage(
         sh.groupBy("doc_id").agg(
             *[
@@ -449,28 +439,7 @@ def q150_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.collect_set("shingle").alias("ss"),
         )
     )
-    sigs = toks.select(
-        "doc_id",
-        F.posexplode(
-            F.array(*[F.col(f"h{i}") for i in range(MINHASH_PORT_TABLES)])
-        ).alias("tbl", "h"),
-    )
-    a = sigs.select(
-        F.col("doc_id").alias("doc_a"), F.col("tbl").alias("tbl_a"), F.col("h").alias("h_a")
-    )
-    b = sigs.select(
-        F.col("doc_id").alias("doc_b"), F.col("tbl").alias("tbl_b"), F.col("h").alias("h_b")
-    )
-    cand = (
-        a.join(
-            b,
-            (F.col("tbl_a") == F.col("tbl_b"))
-            & (F.col("h_a") == F.col("h_b"))
-            & (F.col("doc_a") < F.col("doc_b")),
-        )
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    cand = minhash_candidates(toks, MINHASH_PORT_TABLES)
     sa = toks.select(F.col("doc_id").alias("doc_a"), F.col("ss").alias("ss_a"))
     sb = toks.select(F.col("doc_id").alias("doc_b"), F.col("ss").alias("ss_b"))
     inter = F.size(F.array_intersect("ss_a", "ss_b"))
@@ -513,44 +482,35 @@ def simhash_col(hashes_col: str = "tok_hashes", bits: int = 64) -> F.Column:
     return fp
 
 
-@query(
-    "q53_simhash_neardup",
-    doc="SimHash near-dup: 64-bit fingerprint per doc (xxhash64 token "
-        "hashes JVM-side, bit votes packed by one vectorized Arrow "
-        "kernel — integer-exact vs the expression fold, r12 OPT), "
-        "banded self-join on four 16-bit bands, keep pairs "
-        "with hamming distance <= 6 via bit_count(xor). Rows-only.",
-)
-def q53_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
+def simhash_pairs(
+    docs: DataFrame, tok_hash, bits: int, band_bits: int, max_hamming: int
+) -> DataFrame:
+    """SimHash near-dup pairs over (doc_id, text), shared by both hash
+    families (q53 xxhash64, q151 md5-60bit): ``tok_hash`` maps a word
+    column to a bigint, every token votes its ``bits`` hash bits +1/-1
+    and the sign vector is the fingerprint (one vectorized Arrow
+    kernel, integer-exact vs the expression fold ``simhash_col``);
+    ``bits // band_bits`` bands of ``band_bits`` bits form the
+    self-join key, and pairs within ``max_hamming`` (bit_count of xor)
+    are kept."""
     from sklearn_raster_spark.utils.fold_kernels import simhash_pack_kernel
 
     # NULL-text docs have no tokens and therefore no fingerprint; an
     # unfiltered split(NULL) folds to a constant fp that bands every
-    # NULL doc with every other (random-instance fuzz finding on q151,
-    # the same lineage)
-    docs = read_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    # NULL doc with every other (the oracle's UNNEST of a NULL split
+    # contributes no votes, so the doc never gets a fingerprint)
     fps = (
-        docs.select("doc_id", F.split("text", " ").alias("words"))
-        .select(
-            "doc_id",
-            F.transform("words", lambda w: F.xxhash64(w)).alias("tok_hashes"),
-        )
-        # r12 OPT (guide §4.2): the 64 F.aggregate vote folds ran
-        # INTERPRETED (~64 x |tokens| lambda calls per doc — measured
-        # 1.3 s of this query's 4.0 s); the Arrow kernel computes the
-        # identical integer votes in one vectorized pass (0.34 s,
-        # bit-equal on the full corpus — tests/test_fold_kernels.py).
-        # simhash_col remains the expression-form reference.
-        .select("doc_id", simhash_pack_kernel(64)("tok_hashes").alias("fp"))
+        docs.filter(F.col("text").isNotNull())
+        .select("doc_id", F.split("text", " ").alias("words"))
+        .select("doc_id", F.transform("words", tok_hash).alias("tok_hashes"))
+        .select("doc_id", simhash_pack_kernel(bits)("tok_hashes").alias("fp"))
     )
     # both sides of the banded self-join read this lineage; without a
-    # persist the 64-term fingerprint fold runs TWICE per doc. Eager:
-    # a lazy persist is not populated in time for the second scan when
-    # both sides materialize inside the self-join's one job.
+    # persist the fingerprint kernel runs TWICE per doc. Eager: a lazy
+    # persist is not populated in time for the second scan when both
+    # sides materialize inside the self-join's one job.
     fps = shared_lineage(fps)
-    # band keys: 4 x 16-bit slices; near-dups (hamming<=6) must agree on
-    # at least one band by pigeonhole when hamming <= 3 per 4 bands...
-    # we use <=6 with 4 bands as a recall-oriented candidate filter.
+    band_mask = (1 << band_bits) - 1
     banded = fps.select(
         "doc_id",
         "fp",
@@ -559,15 +519,15 @@ def q53_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 *[
                     F.struct(
                         F.lit(i).alias("band"),
-                        F.shiftright("fp", 16 * i).bitwiseAND(F.lit(0xFFFF)).alias("key"),
+                        F.shiftright("fp", band_bits * i).bitwiseAND(F.lit(band_mask)).alias("key"),
                     )
-                    for i in range(4)
+                    for i in range(bits // band_bits)
                 ]
             )
         ).alias("bk"),
     ).select("doc_id", "fp", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
     a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
+    return (
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
@@ -581,10 +541,25 @@ def q53_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # hamming filter BEFORE the dedup shuffle: far-apart pairs that
         # happen to collide on one band never enter the distinct
-        .filter(F.col("hamming") <= 6)
+        .filter(F.col("hamming") <= max_hamming)
         .distinct()
     )
-    return pairs
+
+
+@query(
+    "q53_simhash_neardup",
+    doc="SimHash near-dup: 64-bit fingerprint per doc (xxhash64 token "
+        "hashes JVM-side, bit votes packed by one vectorized Arrow "
+        "kernel, integer-exact vs the expression fold), "
+        "banded self-join on four 16-bit bands, keep pairs "
+        "with hamming distance <= 6 via bit_count(xor). Rows-only.",
+)
+def q53_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # 4 x 16-bit bands with hamming <= 6: a recall-oriented candidate
+    # filter (pigeonhole guarantees a shared band only up to hamming 3)
+    return simhash_pairs(
+        read_table(spark, sf_dir, "documents"), lambda w: F.xxhash64(w), 64, 16, 6
+    )
 
 
 SIMHASH_PORT_BITS = 60  # md5-int60 hash width (q150's portable family)
@@ -645,68 +620,12 @@ SIMHASH_PORT_HAMMING = 6
         "exists only to make the oracle exact.",
 )
 def q151_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NULL-text docs: no tokens -> no fingerprint -> no bands, matching
-    # the oracle where UNNEST(STRING_SPLIT(NULL)) contributes no votes
-    # and the doc never reaches the fp CTE (random-instance fuzz: the
-    # unfiltered fold gave every NULL doc the SAME fp and banded all of
-    # them together)
-    from sklearn_raster_spark.utils.fold_kernels import simhash_pack_kernel
-
-    docs = read_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    n_bands = SIMHASH_PORT_BITS // SIMHASH_PORT_BAND_BITS
-    band_mask = (1 << SIMHASH_PORT_BAND_BITS) - 1
-    fps = (
-        docs.select("doc_id", F.split("text", " ").alias("words"))
-        .select(
-            "doc_id",
-            F.transform("words", _md5_int60).alias("tok_hashes"),
-        )
-        # r12 OPT: vectorized vote packing (see q53); votes are
-        # integers, so the kernel is bit-identical to the 60-fold
-        # expression form and the oracle grade is unaffected
-        # (hash-verified at sf0.001/0.01/0.1 this round).
-        .select(
-            "doc_id",
-            simhash_pack_kernel(SIMHASH_PORT_BITS)("tok_hashes").alias("fp"),
-        )
-    )
-    fps = shared_lineage(fps)  # both sides of the banded self-join
-    banded = fps.select(
-        "doc_id",
-        "fp",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftright("fp", SIMHASH_PORT_BAND_BITS * i)
-                        .bitwiseAND(F.lit(band_mask))
-                        .alias("key"),
-                    )
-                    for i in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select(
-        "doc_id", "fp", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.bit_count(F.col("a.fp").bitwiseXOR(F.col("b.fp")))
-            .cast("int")
-            .alias("hamming"),
-        )
-        .filter(F.col("hamming") <= SIMHASH_PORT_HAMMING)
-        .distinct()
+    return simhash_pairs(
+        read_table(spark, sf_dir, "documents"),
+        _md5_int60,
+        SIMHASH_PORT_BITS,
+        SIMHASH_PORT_BAND_BITS,
+        SIMHASH_PORT_HAMMING,
     )
 
 

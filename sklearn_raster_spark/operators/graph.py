@@ -157,11 +157,13 @@ def connected_components(
         # reps whose component already collapsed are absent from lvl
         # (their edges became self-loops), hence the left join.
         lmap = lvl.select(F.col("node").alias("_ln"), F.col("lbl").alias("_ll"))
-        # LAZY (r13): labels has exactly one consumer per level (the
-        # next level's fold, or the final action) — the chain of
-        # marked checkpoints materializes inside whichever job reads
-        # it first, still truncating lineage level by level, without
-        # one dedicated |V| materialization job per level.
+        # LAZY: labels has exactly one consumer per level (the next
+        # level's fold, or the final action), and no action inside the
+        # loop reads it, so no level's checkpoint materializes early:
+        # the whole chain materializes, and its lineage truncates, only
+        # at the caller's terminal action. Until then the labels
+        # lineage grows by one join per level (bounded by max_iter),
+        # in exchange for no dedicated |V| materialization job per level.
         labels = (
             labels.join(lmap, labels.lbl == lmap._ln, "left")
             .select("node", F.coalesce("_ll", "lbl").alias("lbl"))

@@ -42,6 +42,25 @@ def l2_norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(sq, F.lit(0.0), lambda acc, x: acc + x))
 
 
+def _cosine(qe: str, qnrm: str, ne: str, nnrm: str) -> Column:
+    """6dp-rounded sequential-fold cosine from precomputed norms."""
+    return F.round(
+        dot_seq(F.col(qe), F.col(ne)) / (F.col(qnrm) * F.col(nnrm)), 6
+    ).alias("cosine")
+
+
+def cosine_top_k(sims: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k of (qid, nid, cosine) rows: cosine descending,
+    ties by nid, 1-based int ``rn``. Every cosine ANN family ends
+    here: brute force (q55), IVF (q69/q157) and sign-LSH (q155)."""
+    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("nid"))
+    return (
+        sims.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select("qid", "nid", "cosine", "rn")
+    )
+
+
 def embedding_dim(emb: DataFrame, expect: int | None = None) -> int:
     """Driver-side probe of the embedding dimension (one first() on a
     single-column projection — a bounded driver action, see VERDICT r5
@@ -108,23 +127,11 @@ def q55_knn_cosine_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("ne"),
         l2_norm(F.col("embedding")).alias("nnrm"),
     )
-    sims = (
+    return cosine_top_k(
         corpus.crossJoin(F.broadcast(queries))
         .filter(F.col("nid") != F.col("qid"))
-        .select(
-            "qid",
-            "nid",
-            F.round(
-                dot_seq(F.col("qe"), F.col("ne")) / (F.col("qnrm") * F.col("nnrm")),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("nid"))
-    return (
-        sims.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("qid", "nid", "cosine", "rn")
+        .select("qid", "nid", _cosine("qe", "qnrm", "ne", "nnrm")),
+        TOP_K,
     )
 
 
@@ -378,7 +385,7 @@ def ivf_topk(
         l2_norm(F.col("embedding")).alias("nnrm"),
         nearest_cell("embedding").alias("cell"),
     )
-    queries = (
+    probes = (
         emb.filter(F.col("vec_id") < n_queries)
         .select(
             F.col("vec_id").alias("qid"),
@@ -387,22 +394,24 @@ def ivf_topk(
             F.explode(probe_cells("embedding")).alias("cell"),
         )
     )
-    sims = (
-        corpus.join(F.broadcast(queries), "cell")
-        .filter(F.col("nid") != F.col("qid"))
-        .select(
-            "qid",
-            "nid",
-            F.round(
-                dot_seq(F.col("qe"), F.col("ne")) / (F.col("qnrm") * F.col("nnrm")), 6
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("nid"))
+    return cosine_top_k(ivf_candidates(corpus, probes), k)
+
+
+def ivf_candidates(corpus: DataFrame, probes: DataFrame) -> DataFrame:
+    """IVF candidate stage shared by the fitted (q69) and portable
+    (q157) quantizers, which differ only in how cells are assigned:
+    ``corpus`` is (nid, ne, nnrm, cell), one cell per vector;
+    ``probes`` is (qid, qe, qnrm, cell), one row per probed cell of
+    each query. Candidates are the corpus rows in probed cells
+    (broadcast hash join — the probe table is n_queries x n_probe
+    rows), scored by exact cosine. Each corpus row lives in exactly
+    one cell and a query's probe cells are distinct, so pairs are
+    already unique — no DISTINCT; the scanned fraction per query is
+    n_probe / n_cells of the corpus."""
     return (
-        sims.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("qid", "nid", "cosine", "rn")
+        corpus.join(F.broadcast(probes), "cell")
+        .filter(F.col("nid") != F.col("qid"))
+        .select("qid", "nid", _cosine("qe", "qnrm", "ne", "nnrm"))
     )
 
 
@@ -513,52 +522,52 @@ def _q100_oracle() -> str:
     """
 
 
+def sign_band_keys(emb: DataFrame, planes: list, bits: int, carry: tuple) -> DataFrame:
+    """Sign-LSH band keys shared by q100 and q155: (*carry, key0..),
+    where band b's key is the '0'/'1' string of the signs of the
+    embedding's dots with ``planes[b*bits:(b+1)*bits]`` (a flat list of
+    hyperplanes). The dots come from one vectorized Arrow kernel,
+    bit-identical to the ``_band_key_col`` expression folds, and keep
+    the hyperplane literals out of the expression tree; the sign
+    decisions (dot > 0, NULL -> '0') stay in Spark, matching the
+    oracles' CASE WHEN."""
+    from sklearn_raster_spark.utils.fold_kernels import plane_dots_kernel
+
+    dotted = emb.select(
+        *carry, plane_dots_kernel(planes)(F.col("embedding")).alias("_pd")
+    )
+    return dotted.select(
+        *carry,
+        *[
+            F.concat(
+                *[
+                    F.when(F.element_at(F.col("_pd"), b * bits + k + 1) > 0, "1").otherwise("0")
+                    for k in range(bits)
+                ]
+            ).alias(f"key{b}")
+            for b in range(len(planes) // bits)
+        ],
+    )
+
+
 def banded_candidate_pairs(emb: DataFrame) -> DataFrame:
     """Distinct candidate pairs under the composed (label, sign-bucket)
     block key, unioned across bands. Per-band blocks are label blocks
     split ~2^SIGN_BITS ways (pytest-pinned below the label-only max);
     identical vectors still share every bucket — that floor is the
     point (they ARE the near-dups)."""
-    # r12 OPT (guide §4.2 + the q160 plan-literal lesson): the 16
-    # hyperplane dots come from ONE vectorized Arrow kernel instead of
-    # 16 interpreted folds whose 16 x 64 literal arrays bloated the
-    # expression tree; the sign decisions (dot > 0, NULL -> '0') stay
-    # in Spark on the bit-identical dot values, so the keys — and the
-    # oracle hash — are unchanged (verified sf0.01/sf0.1).
-    from sklearn_raster_spark.utils.fold_kernels import plane_dots_kernel
-
-    flat_planes = [p for band in _PLANES for p in band]
-    dotted = emb.select(
-        "vec_id",
-        "label",
-        plane_dots_kernel(flat_planes)(F.col("embedding")).alias("_pd"),
-    )
-    wb = dotted.select(
-        "vec_id",
-        "label",
-        *[
-            F.concat(
-                *[
-                    F.when(
-                        F.element_at(F.col("_pd"), i * SIGN_BITS + k + 1) > 0, "1"
-                    ).otherwise("0")
-                    for k in range(SIGN_BITS)
-                ]
-            ).alias(f"bk{i}")
-            for i in range(len(_PLANES))
-        ],
+    wb = sign_band_keys(
+        emb, [p for band in _PLANES for p in band], SIGN_BITS, ("vec_id", "label")
     )
     # eager shared cache: the key projection feeds BOTH sides of all 8
-    # band self-joins — 16 re-evaluations without materialization (the
-    # round-2 persist-before-self-join finding)
+    # band self-joins — 16 re-evaluations without materialization
     wb = shared_lineage(wb)
-    # NOTE (r12, measured and rejected): collapsing the 8 per-band
-    # self-joins into ONE explode+(label, band, key) self-join (the
-    # q155 shape) produced the identical pair set (multiset-pinned in
-    # tests/test_llm_ops.py::test_banded_candidates_match_per_band_
-    # reference, oracle-green both SFs) but measured SLOWER in
-    # alternating same-window legs (medians 2.24/2.40/2.44 -> 2.72/
-    # 2.81 s at sf0.1): the per-band joins all broadcast-probe this
+    # Per-band self-joins, not one explode+(label, band, key) self-join
+    # (the q155 shape): both give the identical pair set (multiset-
+    # pinned in tests/test_llm_ops.py::test_banded_candidates_match_
+    # per_band_reference), but the explode form measured SLOWER at
+    # sf0.1 (medians 2.24/2.40/2.44 -> 2.72/2.81 s in alternating
+    # same-window legs): the per-band joins all broadcast-probe this
     # small cached key table with zero exchanges, while the explode
     # form pays a real shuffle plus a double explode of the cache. At
     # cluster scale the two shuffle the same bytes (explode: one
@@ -569,7 +578,7 @@ def banded_candidate_pairs(emb: DataFrame) -> DataFrame:
             wb.alias("b"),
             (F.col("a.label") == F.col("b.label"))
             & (F.col("a.vec_id") < F.col("b.vec_id"))
-            & (F.col(f"a.bk{i}") == F.col(f"b.bk{i}")),
+            & (F.col(f"a.key{i}") == F.col(f"b.key{i}")),
         ).select(F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b"))
         for i in range(len(_PLANES))
     ]
@@ -605,15 +614,10 @@ def q100_bounded_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = banded_candidate_pairs(emb)
     a = with_norm.alias("a")
     b = with_norm.alias("b")
-    cos = F.round(
-        dot_seq(F.col("a.embedding"), F.col("b.embedding"))
-        / (F.col("a.nrm") * F.col("b.nrm")),
-        6,
-    )
     return (
         cand.join(a, cand.id_a == F.col("a.vec_id"))
         .join(b, cand.id_b == F.col("b.vec_id"))
-        .select("id_a", "id_b", cos.alias("cosine"))
+        .select("id_a", "id_b", _cosine("a.embedding", "a.nrm", "b.embedding", "b.nrm"))
         .filter(F.col("cosine") >= 0.35)
     )
 
@@ -872,7 +876,7 @@ def _pq_fit(spark: SparkSession, sf_dir: str):
     practice: centroids need a representative sample, not the
     corpus; driver threads let Spark schedule the fixed-count fits
     in parallel). Returns (base, centroids) with centroids as plain
-    Python lists, ready to embed as literal arrays.
+    Python lists, ready for the PQ Arrow kernels.
 
     Sampling audit (the q175/q69 id-prefix hazard): this sample is
     ``vec_id % 5 == 0`` — a MODULO stride, not a prefix — so it spans
@@ -960,13 +964,11 @@ def q135_product_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     base, centroids = _pq_fit(spark, sf_dir)
-    # r12 OPT (guide §4.2): the 8x16 per-row distance folds ran as
-    # interpreted higher-order functions (~2 s per encode pass at
-    # sf0.1); the Arrow kernels compute the identical sequential-fold
-    # float64 distances (cumsum operand order), the identical
-    # first-occurrence argmin codes, and the identical left-to-right
-    # sq_error sum — bit-equality pinned by tests/test_fold_kernels.py;
-    # _pq_code_terms remains the expression-form reference.
+    # Arrow kernels, not interpreted per-row distance folds: identical
+    # sequential-fold float64 distances (cumsum operand order),
+    # first-occurrence argmin codes and left-to-right sq_error sum —
+    # bit-equality with the expression form (_pq_code_terms) pinned by
+    # tests/test_fold_kernels.py.
     subs = F.array(*[f"sub{s}" for s in range(PQ_SUBSPACES)])
     codes_arr = pq_codes_kernel(centroids)(subs)
     sq_err = pq_sqerr_kernel(centroids)(subs)
@@ -987,73 +989,70 @@ PQ_RERANK_FACTOR = 10  # ADC candidates per final result, exact re-ranked
         "IVF-PQ index, completing q135's build path): each query "
         "vector precomputes a lookup table of squared distances from "
         f"its {PQ_SUBSPACES} subvectors to every codebook centroid "
-        f"({PQ_SUBSPACES} x {PQ_CODEBOOK} doubles, driver-side, "
-        "embedded as literals in the broadcast query row); a corpus "
+        f"({PQ_SUBSPACES} x {PQ_CODEBOOK} doubles, computed in-engine "
+        "and broadcast with the query row); a corpus "
         "document's approximate distance is then just the SUM OF "
         f"{PQ_SUBSPACES} TABLE LOOKUPS indexed by its codes — the ADC "
         "trick that scores billions of 4-bit-coded vectors without "
-        "touching a float vector. Plan: one narrow encode projection "
-        "over the corpus (q135's expression path), a broadcast "
+        "touching a float vector. Plan: q160's encode -> ADC -> "
+        "exact re-rank stage with fitted codebooks: one narrow "
+        "encode projection over the corpus, a broadcast "
         "cross-join against the tiny query-LUT table, per-query "
         "top-k via ranking window (group-limit pushdown). Rows-only "
         "(k-means codebooks are fitted state); recall vs the exact "
         "scan is pytest-pinned.",
 )
 def q136_pq_ann_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sklearn_raster_spark.utils.fold_kernels import pq_codes_kernel
-
     base, centroids = _pq_fit(spark, sf_dir)
-    # r12 OPT: vectorized encode (see q135) — identical codes
+    return pq_adc_search(
+        base, centroids, read_table(spark, sf_dir, "embeddings")
+    ).withColumn("qid", F.col("qid").cast("int"))
+
+
+def pq_adc_search(base: DataFrame, codebooks: list, emb: DataFrame) -> DataFrame:
+    """PQ asymmetric-distance search shared by the fitted (q136) and
+    portable (q160) codebooks: ``base`` is the _pq_base subvector
+    table, ``emb`` the raw embeddings for the exact re-rank.
+
+    - Encode: one narrow projection, first-occurrence argmin code per
+      subspace (Arrow kernel, bit-identical to _pq_code_terms).
+    - Query LUTs: lut[s][c] = ||query_sub_s - codebook[s][c]||^2 for
+      the N_QUERIES query rows, computed in-engine by pq_lut_kernel
+      (the same left-to-right float64 fold as the oracle's LIST_REDUCE)
+      — the codebook literals stay out of the expression tree.
+    - ADC score: the S table lookups indexed by a row's codes, summed
+      left to right, against a broadcast of the query LUTs.
+    - Candidate cut: PQ_ANN_TOP * PQ_RERANK_FACTOR rows per query by
+      (adc_dist, nid); ADC is a coarse 4-bit-per-subvector score, so
+      the exact squared distance re-ranks only that cut into the
+      top-PQ_ANN_TOP by (exact_dist, nid)."""
+    from sklearn_raster_spark.utils.fold_kernels import pq_codes_kernel, pq_lut_kernel
+
+    subs = F.array(*[f"sub{s}" for s in range(PQ_SUBSPACES)])
     coded = base.select(
-        F.col("vec_id").alias("nid"),
-        pq_codes_kernel(centroids)(
-            F.array(*[f"sub{s}" for s in range(PQ_SUBSPACES)])
-        ).alias("codes"),
+        F.col("vec_id").alias("nid"), pq_codes_kernel(codebooks)(subs).alias("codes")
     )
-
-    # driver-side LUTs for the (tiny, fixed) query set: lut[s][c] =
-    # ||query_sub_s - centroid_{s,c}||^2
-    q_rows = (
-        base.filter(F.col("vec_id") < N_QUERIES)
-        .select("vec_id", *[f"sub{s}" for s in range(PQ_SUBSPACES)])
-        .collect()
+    queries = base.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("qid"), pq_lut_kernel(codebooks)(subs).alias("lut")
     )
-    luts = []
-    for r in q_rows:
-        lut = [
-            [
-                sum((a - b) * (a - b) for a, b in zip(r[f"sub{s}"], c))
-                for c in centroids[s]
-            ]
-            for s in range(PQ_SUBSPACES)
-        ]
-        luts.append((r["vec_id"], lut))
-    queries = spark.createDataFrame(
-        [(qid, lut) for qid, lut in luts], "qid int, lut array<array<double>>"
-    )
-
-    adc = F.aggregate(
-        F.sequence(F.lit(0), F.lit(PQ_SUBSPACES - 1)),
-        F.lit(0.0),
-        lambda acc, s: acc
-        + F.element_at(F.element_at("lut", s + 1), F.element_at("codes", s + 1) + 1),
-    )
+    adc = None
+    for s in range(PQ_SUBSPACES):
+        term = F.element_at(
+            F.element_at(F.col("lut"), s + 1),
+            F.element_at(F.col("codes"), s + 1) + 1,
+        )
+        adc = term if adc is None else adc + term
     scored = (
         coded.crossJoin(F.broadcast(queries))
         .filter(F.col("nid") != F.col("qid"))
         .select("qid", "nid", F.round(adc, 6).alias("adc_dist"))
     )
-    # exact re-rank stage (standard IVF-PQ practice): ADC is a coarse
-    # 4-bit-per-subvector score, so take a candidate multiple by ADC
-    # and re-rank those few rows with TRUE distances — the expensive
-    # exact math runs on k*RERANK rows per query, not the corpus
     w_adc = Window.partitionBy("qid").orderBy("adc_dist", "nid")
     cands = (
         scored.withColumn("arn", F.row_number().over(w_adc))
         .filter(F.col("arn") <= PQ_ANN_TOP * PQ_RERANK_FACTOR)
         .select("qid", "nid", "adc_dist")
     )
-    emb = read_table(spark, sf_dir, "embeddings")
     qe = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("q_emb")
     )
@@ -1076,7 +1075,7 @@ def q136_pq_ann_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         reranked.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= PQ_ANN_TOP)
-        .select("qid", "nid", "adc_dist", "exact_dist", F.col("rn").cast("int"))
+        .select("qid", "nid", "adc_dist", "exact_dist", "rn")
     )
 
 
@@ -1182,7 +1181,6 @@ def _sign_lsh_oracle() -> str:
         "library path.",
 )
 def q155_ann_signlsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    n_bands = SIGN_LSH_BANDS
     # NULL vectors carry no sign-band key (oracle keyed CTE matches)
     emb = read_table(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull()
@@ -1191,35 +1189,11 @@ def q155_ann_signlsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     # null-pad, collapsing every vector into band key '0000...' and
     # degenerating the band join into an all-pairs cross
     embedding_dim(emb, expect=SIGN_EMB_DIM)
-    # r12 OPT: one vectorized Arrow kernel for the 32 hyperplane dots
-    # (8 bands x 4 bits) in place of 32 interpreted folds + 32 x 64
-    # plan literals; sign decisions stay in Spark on bit-identical dot
-    # values, keys and oracle hash unchanged (see banded_candidate_pairs)
-    from sklearn_raster_spark.utils.fold_kernels import plane_dots_kernel
-
-    flat_planes = [p for band in _SIGN_LSH_PLANES for p in band]
-    dotted = emb.select(
-        "vec_id",
-        "embedding",
-        plane_dots_kernel(flat_planes)(F.col("embedding")).alias("_pd"),
-    )
-    keyed = dotted.select(
-        "vec_id",
-        "embedding",
-        *[
-            F.concat(
-                *[
-                    F.when(
-                        F.element_at(
-                            F.col("_pd"), b * SIGN_LSH_BITS + k + 1
-                        ) > 0,
-                        "1",
-                    ).otherwise("0")
-                    for k in range(SIGN_LSH_BITS)
-                ]
-            ).alias(f"key{b}")
-            for b in range(n_bands)
-        ],
+    keyed = sign_band_keys(
+        emb,
+        [p for band in _SIGN_LSH_PLANES for p in band],
+        SIGN_LSH_BITS,
+        ("vec_id", "embedding"),
     )
     keyed = shared_lineage(keyed)  # feeds both sides of the band join
     banded = keyed.select(
@@ -1228,7 +1202,7 @@ def q155_ann_signlsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array(
                 *[
                     F.struct(F.lit(b).alias("band"), F.col(f"key{b}").alias("key"))
-                    for b in range(n_bands)
+                    for b in range(SIGN_LSH_BANDS)
                 ]
             )
         ).alias("bk"),
@@ -1249,22 +1223,11 @@ def q155_ann_signlsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     nv = vecs.select(
         F.col("vec_id").alias("nid"), F.col("embedding").alias("ne"), F.col("nrm").alias("nn")
     )
-    sims = (
+    return cosine_top_k(
         cand.join(F.broadcast(qv), "qid")
         .join(nv, "nid")
-        .select(
-            "qid",
-            "nid",
-            F.round(
-                dot_seq(F.col("qe"), F.col("ne")) / (F.col("qn") * F.col("nn")), 6
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("nid"))
-    return (
-        sims.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("qid", "nid", "cosine", F.col("rn").cast("int").alias("rn"))
+        .select("qid", "nid", _cosine("qe", "qn", "ne", "nn")),
+        TOP_K,
     )
 
 
@@ -1389,13 +1352,7 @@ def _ivf_oracle() -> str:
         "exact q55. Reference analog: kneighbors (estimator.py:345-518).",
 )
 def q157_ann_ivf_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sims = ivf_portable_candidates(spark, sf_dir)
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("nid"))
-    return (
-        sims.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("qid", "nid", "cosine", F.col("rn").cast("int").alias("rn"))
-    )
+    return cosine_top_k(ivf_portable_candidates(spark, sf_dir), TOP_K)
 
 
 def ivf_portable_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1440,21 +1397,7 @@ def ivf_portable_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("pr") <= IVF_PROBE)
         .select("qid", "qe", "qnrm", F.col("cell").cast("int").alias("cell"))
     )
-    # candidates = corpus rows in probed cells (each corpus row lives in
-    # exactly ONE cell and probe cells are distinct per query, so pairs
-    # are already unique — no DISTINCT); probe fraction = IVF_PROBE /
-    # IVF_CELLS of the corpus per query, the IVF scale contract
-    return (
-        corpus.join(F.broadcast(probes), "cell")
-        .filter(F.col("nid") != F.col("qid"))
-        .select(
-            "qid",
-            "nid",
-            F.round(
-                dot_seq(F.col("qe"), F.col("ne")) / (F.col("qnrm") * F.col("nnrm")), 6
-            ).alias("cosine"),
-        )
-    )
+    return ivf_candidates(corpus, probes)
 
 
 # --- portable PQ-ADC (q160): the compression family, hash-graded ------
@@ -1468,9 +1411,8 @@ def ivf_portable_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 # IVF, this closes PQ, the last ANN/compression family without an exact
 # driver grade. All distances are sequential zip-folds of doubles
 # (identical operand order in both engines), codes are first-occurrence
-# argmin positions, and the LUTs are computed IN-ENGINE from the same
-# fold expressions (no driver-side float math at all — unlike q136's
-# collected LUTs, nothing here ever leaves the JVM).
+# argmin positions, and the LUTs are computed in-engine by the same
+# kernel q136 uses (no driver-side float math).
 
 PQP_SPREAD = 0.25  # codebook component range: ~±2σ of unit-norm 64-d comps
 
@@ -1588,8 +1530,8 @@ def _pqp_oracle() -> str:
         "codebook LITERALS in place of the fitted per-subspace "
         "k-means. Codes are first-occurrence argmin positions over "
         "sequential-fold squared distances; the per-query distance "
-        "LUTs are computed IN-ENGINE from the same fold expressions "
-        "(no driver-side float math, unlike q136's collected LUTs); a "
+        "LUTs are computed in-engine by the same sequential fold "
+        "(no driver-side float math); a "
         f"corpus row's ADC score is {PQ_SUBSPACES} list lookups summed "
         "left-to-right; candidates cut at "
         f"{PQ_ANN_TOP * PQ_RERANK_FACTOR} by (adc, nid) and re-ranked "
@@ -1603,73 +1545,6 @@ def _pqp_oracle() -> str:
         "cut. Reference analog: kneighbors (estimator.py:345-518).",
 )
 def q160_pq_adc_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sklearn_raster_spark.utils.fold_kernels import pq_codes_kernel
-
-    base = _pq_base(spark, sf_dir)
-    embedding_dim(read_table(spark, sf_dir, "embeddings"), expect=_EMB_DIM)
-    # r12 OPT: vectorized encode (see q135) — identical codes, so the
-    # DuckDB oracle grade is unaffected (hash-verified this round);
-    # the query-LUT folds stay JVM expressions (N_QUERIES rows only)
-    coded = base.select(
-        F.col("vec_id").alias("nid"),
-        pq_codes_kernel(_PQP_CODEBOOKS)(
-            F.array(*[f"sub{s}" for s in range(PQ_SUBSPACES)])
-        ).alias("codes"),
-    )
-    # per-query LUTs via the Arrow kernel — lut[s][c] =
-    # ||query_sub_s - codebook[s][c]||^2, identical sequential-fold
-    # values, still computed in-engine (executor-side, never the
-    # driver). r12 OPT: the expression form embedded 8x16 centroid
-    # literal arrays; ANALYZING that tree cost ~5 s at sf0.1 for five
-    # query rows — the plan, not the data, was the bottleneck.
-    from sklearn_raster_spark.utils.fold_kernels import pq_lut_kernel
-
-    queries = base.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"),
-        pq_lut_kernel(_PQP_CODEBOOKS)(
-            F.array(*[f"sub{s}" for s in range(PQ_SUBSPACES)])
-        ).alias("lut"),
-    )
-    adc = None
-    for s in range(PQ_SUBSPACES):
-        term = F.element_at(
-            F.element_at(F.col("lut"), s + 1),
-            F.element_at(F.col("codes"), s + 1) + 1,
-        )
-        adc = term if adc is None else adc + term
-    scored = (
-        coded.crossJoin(F.broadcast(queries))
-        .filter(F.col("nid") != F.col("qid"))
-        .select("qid", "nid", F.round(adc, 6).alias("adc_dist"))
-    )
-    w_adc = Window.partitionBy("qid").orderBy("adc_dist", "nid")
-    cands = (
-        scored.withColumn("arn", F.row_number().over(w_adc))
-        .filter(F.col("arn") <= PQ_ANN_TOP * PQ_RERANK_FACTOR)
-        .select("qid", "nid", "adc_dist")
-    )
     emb = read_table(spark, sf_dir, "embeddings")
-    qe = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("q_emb")
-    )
-    ne = emb.select(F.col("vec_id").alias("nid"), F.col("embedding").alias("n_emb"))
-    exact_d = F.aggregate(
-        F.zip_with(
-            "q_emb", "n_emb",
-            lambda a, b: (a.cast("double") - b.cast("double"))
-            * (a.cast("double") - b.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    reranked = (
-        cands.join(F.broadcast(qe), "qid")
-        .join(ne, "nid")
-        .select("qid", "nid", "adc_dist", F.round(exact_d, 6).alias("exact_dist"))
-    )
-    w = Window.partitionBy("qid").orderBy("exact_dist", "nid")
-    return (
-        reranked.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= PQ_ANN_TOP)
-        .select("qid", "nid", "adc_dist", "exact_dist", F.col("rn").cast("int").alias("rn"))
-    )
+    embedding_dim(emb, expect=_EMB_DIM)
+    return pq_adc_search(_pq_base(spark, sf_dir), _PQP_CODEBOOKS, emb)

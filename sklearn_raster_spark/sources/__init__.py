@@ -113,10 +113,6 @@ def materialize_table_as(spark: SparkSession, sf_dir: str, name: str, fmt: str) 
     return path
 
 
-def read_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: read_table(spark, sf_dir, name) for name in TABLES}
-
-
 def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
     """Expose every table as a temp view for spark.sql() surfaces."""
     for name in TABLES:

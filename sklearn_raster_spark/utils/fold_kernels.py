@@ -125,46 +125,6 @@ def _fold_pair_slow(a_row, b_row, op) -> float | None:
     return acc
 
 
-def _pairwise_kernel(a: pa.Array, b: pa.Array, op_fast, op_slow) -> pa.Array:
-    if isinstance(a, pa.ChunkedArray):  # pragma: no cover - defensive
-        a = a.combine_chunks()
-    if isinstance(b, pa.ChunkedArray):  # pragma: no cover - defensive
-        b = b.combine_chunks()
-    fa, ra = _list_to_matrix(a)
-    fb, rb = _list_to_matrix(b)
-    if fa is not None and fb is not None and fa[2] == fb[2]:
-        ma, va, _ = fa
-        mb, vb, _ = fb
-        out = _seq_fold_rows(op_fast(ma, mb))
-        valid = va & vb
-        return pa.array(out, type=pa.float64(), mask=~valid)
-    # exact fallback (ragged / element nulls / dim mismatch)
-    al, bl = a.to_pylist(), b.to_pylist()
-    return pa.array(
-        [_fold_pair_slow(x, y, op_slow) for x, y in zip(al, bl)],
-        type=pa.float64(),
-    )
-
-
-@F.arrow_udf(DoubleType())
-def dot_fold_kernel(a: pa.Array, b: pa.Array) -> pa.Array:
-    """Sequential-fold dot product: sum_i a_i*b_i, left-to-right."""
-    return _pairwise_kernel(
-        a, b, lambda ma, mb: ma * mb, lambda x, y: x * y
-    )
-
-
-@F.arrow_udf(DoubleType())
-def sqdist_fold_kernel(a: pa.Array, b: pa.Array) -> pa.Array:
-    """Sequential-fold squared distance: sum_i (a_i-b_i)^2."""
-    return _pairwise_kernel(
-        a,
-        b,
-        lambda ma, mb: (ma - mb) * (ma - mb),
-        lambda x, y: (x - y) * (x - y),
-    )
-
-
 def simhash_pack_kernel(bits: int):
     """arrow_udf factory: list<bigint> token hashes -> bigint SimHash
     fingerprint, INTEGER-exact vs the 64-fold expression form
@@ -404,24 +364,6 @@ def _pq_dists_fast(mat: np.ndarray, cents: np.ndarray) -> np.ndarray:
     n, c, d = sq.shape
     with_init = np.concatenate([np.zeros((n, c, 1)), sq], axis=2)
     return np.cumsum(with_init, axis=2)[:, :, -1]
-
-
-def _pq_dists_slow(rows, cents: np.ndarray):
-    """Exact per-row fallback: (dists [n, C] with None->NaN markers,
-    valid [n, C] bool) replicating zip_with null-padding semantics."""
-    out = np.full((len(rows), len(cents)), np.nan)
-    valid = np.ones((len(rows), len(cents)), dtype=bool)
-    for i, r in enumerate(rows):
-        if r is None:
-            valid[i, :] = False
-            continue
-        for j, cent in enumerate(cents):
-            v = _fold_pair_slow(r, list(cent), lambda x, y: (x - y) * (x - y))
-            if v is None:
-                valid[i, j] = False
-            else:
-                out[i, j] = v
-    return out, valid
 
 
 def _argmin_first_spark(dists: np.ndarray) -> np.ndarray:

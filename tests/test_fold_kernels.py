@@ -87,33 +87,49 @@ def test_pq_kernels_match_expressions_portable(spark, sf_dir):
     assert old == new and len(old) > 0
 
 
-def test_pq_lut_kernel_matches_expression_folds(spark, sf_dir):
+@pytest.mark.parametrize("codebook", ["portable", "fitted"])
+def test_pq_lut_kernel_matches_expression_folds(spark, sf_dir, codebook):
+    """pq_lut_kernel is bit-equal to both LUT formulas it replaced:
+    q160's in-plan fold expressions over its literal codebooks, and
+    q136's driver-side Python ``sum`` over its fitted (non-literal)
+    codebooks — so both ADC searches build their LUTs with the kernel
+    and no query collects its query rows to the driver."""
     base = sim._pq_base(spark, sf_dir).filter(F.col("vec_id") < sim.N_QUERIES)
-    cb = sim._PQP_CODEBOOKS
+    if codebook == "portable":
+        cb = sim._PQP_CODEBOOKS
 
-    def lut_col(s):
-        return F.array(
-            *[
-                F.aggregate(
-                    F.zip_with(
-                        F.col(f"sub{s}"),
-                        F.array(*[F.lit(float(x)) for x in c]),
-                        lambda a, b: (a - b) * (a - b),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                for c in cb[s]
+        def lut_col(s):
+            return F.array(
+                *[
+                    F.aggregate(
+                        F.zip_with(
+                            F.col(f"sub{s}"),
+                            F.array(*[F.lit(float(x)) for x in c]),
+                            lambda a, b: (a - b) * (a - b),
+                        ),
+                        F.lit(0.0),
+                        lambda acc, x: acc + x,
+                    )
+                    for c in cb[s]
+                ]
+            ).alias(f"l{s}")
+
+        old_rows = base.select(
+            "vec_id", *[lut_col(s) for s in range(sim.PQ_SUBSPACES)]
+        ).collect()
+        old = {
+            r["vec_id"]: [list(r[f"l{s}"]) for s in range(sim.PQ_SUBSPACES)]
+            for r in old_rows
+        }
+    else:
+        _, cb = sim._pq_fit(spark, sf_dir)
+        old = {
+            r["vec_id"]: [
+                [sum((a - b) * (a - b) for a, b in zip(r[f"sub{s}"], c)) for c in cb[s]]
+                for s in range(sim.PQ_SUBSPACES)
             ]
-        ).alias(f"l{s}")
-
-    old_rows = base.select(
-        "vec_id", *[lut_col(s) for s in range(sim.PQ_SUBSPACES)]
-    ).collect()
-    old = {
-        r["vec_id"]: [list(r[f"l{s}"]) for s in range(sim.PQ_SUBSPACES)]
-        for r in old_rows
-    }
+            for r in base.collect()
+        }
     new = {
         r[0]: [list(x) for x in r[1]]
         for r in base.select(

@@ -4,18 +4,28 @@ Usage: python tools/capture_plans.py <outdir> <suffix> q52,q104,...
 Query args match on prefix (q52 -> q52_minhash_lsh_pairs). Builders
 run their normal driver-side work (fits, counts, persists) so the
 captured plan is the one the bench executes; the final action itself
-is NOT run (explain only).
+is NOT run (explain only). Expression ids (``#123``) and
+``plan_id=123`` are written as ``#N`` / ``plan_id=N``, so plans of two
+checkouts diff cleanly.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 from pathlib import Path
 
 REPO = str(Path(__file__).resolve().parent.parent)
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
+
+_EXPR_ID = re.compile(r"#\d+")
+_PLAN_ID = re.compile(r"plan_id=\d+")
+
+
+def normalize_plan(plan: str) -> str:
+    return _PLAN_ID.sub("plan_id=N", _EXPR_ID.sub("#N", plan))
 
 
 def main() -> int:
@@ -36,8 +46,10 @@ def main() -> int:
             continue
         try:
             df = spec.fn(spark, sf_dir)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
+            plan = normalize_plan(
+                df._sc._jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "formatted"
+                )
             )
         except Exception as exc:  # noqa: BLE001
             plan = f"ERROR building plan: {exc}"
