@@ -7,7 +7,7 @@ estimators to n-dimensional gridded feature arrays with NoData masking
 DataFrame (one row per sample, one column per feature; SQL NULL is the
 canonical NoData mask — SURVEY.md §1.4), the execution engine is
 Catalyst/Tungsten, and the per-chunk estimator kernel is an Arrow-batched
-``mapInPandas``.
+``mapInArrow``.
 
 Layers:
 - ``features``    FeatureFrame: names + per-feature nodata registry + metadata

@@ -4,8 +4,9 @@ FeatureFrame, distributed.
 Reference parity: src/sklearn_raster/estimator.py wraps an estimator so
 predict / predict_proba / transform / inverse_transform / kneighbors
 run batch-wise over an n-d array with NoData handling. Here the batch
-engine is ``FeaturewiseUfunc`` (mapInPandas) and the model ships to
-executors via ``SparkContext.broadcast`` once, not per task.
+engine is ``FeaturewiseUfunc`` (one ``mapInArrow`` pass that skips NoData
+rows and scatters the nodata encoding back itself) and the model ships
+to executors via ``SparkContext.broadcast`` once, not per task.
 
 The wrapped estimator is duck-typed (fit/predict/...); no sklearn
 import is required — any object with the method works, including the
@@ -315,8 +316,8 @@ class SparkEstimator:
         """Expression-compiled scoring: ``compile_fn(feature_cols)`` emits
         Catalyst column expressions, so the model runs inside whole-stage
         codegen with ZERO Python boundary. NoData semantics are identical
-        to the skip/scatter path — one when(mask, nodata).otherwise(expr)
-        per output replaces filter+UDF+union. Callers check feature
+        to the Arrow kernel's skip/scatter — one
+        when(mask, nodata).otherwise(expr) per output. Callers check feature
         names first (inverse_transform's inputs are transformed columns,
         so it skips that check)."""
         import pyspark.sql.functions as F
@@ -664,7 +665,8 @@ class SparkEstimator:
             for i in range(1, k + 1)
         ]
         out_cols = (dist_cols + idx_cols) if return_distance else idx_cols
-        # keep_features mirrors the exact path's keep_cols (ufunc.py:160)
+        # keep_features mirrors the exact path's passthrough columns
+        # (FeaturewiseUfunc.__call__)
         passthrough = [
             c
             for c in data.columns

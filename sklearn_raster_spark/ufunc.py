@@ -5,30 +5,32 @@ Reference parity: src/sklearn_raster/ufunc/_base.py:141-268 orchestrates
 chunk, with NoData skip/scatter-back and declared output metadata". The
 Spark-native translation (SURVEY.md O1-O15):
 
-- chunk            -> Arrow batch inside ``mapInPandas``
-- declared outputs -> the ``returnType`` StructType (Spark, like the
+- chunk            -> Arrow ``RecordBatch`` inside ``mapInArrow``
+- declared outputs -> the ``mapInArrow`` output schema (Spark, like the
                       reference, needs output schema before execution)
-- skip-NoData      -> ``filter`` BEFORE the UDF (Catalyst pushes it to
-                      the scan — strictly better than the reference,
-                      which masks after loading)
-- scatter-back     -> ``unionByName`` of masked rows carrying the
-                      ``nodata`` literal for every output column (rows
-                      are unordered in Spark, so no positional restore
-                      is needed)
-- ensure_min_samples -> per-batch pandas padding inside the UDF (not
-                      expressible relationally; reference
+- skip-NoData      -> the row-level NoData mask is one boolean column
+                      of the projection over the source (JVM codegen);
+                      the kernel runs ``func`` on the unmasked rows only
+                      (reference O4, ufunc/_base.py:292-302)
+- scatter-back     -> inside the same kernel: each output is allocated
+                      full-size, prefilled with its ``nodata`` encoding,
+                      and the valid results are written into the
+                      unmasked slots (reference O5,
+                      ufunc/_base.py:384-408). One scan of the source
+                      and one pass across the Python boundary per call.
+- ensure_min_samples -> per-batch padding of the valid rows inside the
+                      kernel (not expressible relationally; reference
                       ufunc/_base.py:366-382)
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Any, Callable, Iterator, Sequence
+from typing import Any, Callable, Sequence
 
 import numpy as np
-import pandas as pd
-
-from pyspark.sql import functions as F
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from sklearn_raster_spark.features import FeatureFrame
 from sklearn_raster_spark.utils.casting import default_nodata_for, validate_nodata
@@ -155,9 +157,11 @@ class FeaturewiseUfunc:
                     f"Cannot ensure {ensure_min_samples} samples: the input "
                     f"has only {total} rows in total."
                 )
-        features = list(ff.features)
-        passthrough = [c for c in df.columns if c not in ff.features]
-        keep_cols = df.columns if keep_features else passthrough
+        cols = df.columns
+        feat_idx = [cols.index(f) for f in ff.features]
+        keep_idx = [i for i, c in enumerate(cols) if keep_features or c not in ff.features]
+        keep_cols = [cols[i] for i in keep_idx]
+        out_names = [n for o in self.outputs for n in o.names]
 
         in_dtypes = dict(df.dtypes)
         schema = ", ".join(
@@ -167,85 +171,91 @@ class FeaturewiseUfunc:
 
         func = self.func
         outputs = self.outputs
-        out_names = [list(o.names) for o in outputs]
         out_np = [_NP_DTYPE[o.dtype] for o in outputs]
+        out_pa = [pa.from_numpy_dtype(t) for t in out_np]
+        out_nodata = [o.resolved_nodata() for o in outputs]
         # reference O8 (ufunc/_base.py:453-466): detect VALID outputs that
         # legitimately equal the NoData encoding (indistinguishable from
         # masked rows downstream). NaN encodings can't collide with valid
         # values by definition and are skipped.
         out_collision_vals = [
-            None
-            if (isinstance(nd := o.resolved_nodata(), float) and np.isnan(nd))
-            else nd
-            for o in outputs
+            None if isinstance(nd, float) and np.isnan(nd) else nd for nd in out_nodata
         ]
+        # the row mask rides as the last column of the one projection
+        # over the source; it is never NULL (isNull ORs into it)
+        mask_idx = len(cols) if skip_nodata else None
 
-        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def kernel(batches):
             with limit_inner_threads(inner_thread_limit):
-                for pdf in batches:
-                    n = len(pdf)
+                for batch in batches:
+                    n = batch.num_rows
                     if n == 0:
                         continue
-                    X = pdf[features].to_numpy(dtype=np.float64, na_value=np.nan)
-                    if nan_fill is not None:
-                        X = np.where(np.isnan(X), nan_fill, X)
-                    pad = max(0, ensure_min_samples - n)
-                    if pad:
-                        # reference O6: temporarily unmask dummy rows so
-                        # min-sample estimators see a full batch
-                        X = np.vstack([X, np.full((pad, X.shape[1]), nan_fill or 0.0)])
-                    res = func(X)
-                    if not isinstance(res, tuple):
-                        res = (res,)
-                    if len(res) != len(outputs):
-                        raise ValueError(
-                            f"func returned {len(res)} outputs, declared {len(outputs)}"
-                        )
-                    out = pdf[keep_cols].copy() if keep_cols else pd.DataFrame(index=pdf.index)
-                    for arr, names, npdt in zip(res, out_names, out_np):
-                        arr = np.asarray(arr)
-                        if arr.ndim == 1:
-                            arr = arr[:, None]
+                    rows = (
+                        slice(None)
+                        if mask_idx is None
+                        else ~batch.column(mask_idx).to_numpy(zero_copy_only=False)
+                    )
+                    # column-major (n_valid, n_features), one contiguous
+                    # run per feature as the Arrow columns arrive: BLAS
+                    # picks its summation order by memory layout, so the
+                    # layout is part of the bit-exact output contract
+                    X = np.vstack(
+                        [
+                            pc.cast(batch.column(i), pa.float64()).to_numpy(zero_copy_only=False)[rows]
+                            for i in feat_idx
+                        ]
+                    ).T
+                    nv = len(X)
+                    # (k, n): each output column is a contiguous row
+                    full = [
+                        np.full((len(o.names), n), nd, dtype=npdt)
+                        for o, nd, npdt in zip(outputs, out_nodata, out_np)
+                    ]
+                    if nv:
+                        if nan_fill is not None:
+                            X = np.where(np.isnan(X), nan_fill, X)
+                        pad = max(0, ensure_min_samples - nv)
                         if pad:
-                            arr = arr[:n]
-                        if arr.shape != (n, len(names)):
+                            # reference O6: temporarily unmask dummy rows so
+                            # min-sample estimators see a full batch
+                            X = np.vstack([X, np.full((pad, X.shape[1]), nan_fill or 0.0)])
+                        res = func(X)
+                        if not isinstance(res, tuple):
+                            res = (res,)
+                        if len(res) != len(outputs):
                             raise ValueError(
-                                f"output shape {arr.shape} != ({n}, {len(names)})"
+                                f"func returned {len(res)} outputs, declared {len(outputs)}"
                             )
-                        for j, name in enumerate(names):
-                            out[name] = arr[:, j].astype(npdt, copy=False)
-                    if collision_counter is not None:
                         hits = 0
-                        for arr, cval in zip(res, out_collision_vals):
+                        for arr, dst, npdt, cval in zip(res, full, out_np, out_collision_vals):
+                            arr = np.asarray(arr)
+                            if arr.ndim == 1:
+                                arr = arr[:, None]
+                            if pad:
+                                arr = arr[:nv]
+                            if arr.shape != (nv, len(dst)):
+                                raise ValueError(
+                                    f"output shape {arr.shape} != ({nv}, {len(dst)})"
+                                )
+                            dst[:, rows] = arr.T.astype(npdt, copy=False)
                             if cval is not None:
-                                hits += int((np.asarray(arr)[:n] == cval).sum())
-                        if hits:
+                                hits += int((arr == cval).sum())
+                        if hits and collision_counter is not None:
                             collision_counter.add(hits)
-                    yield out
+                    arrays = [batch.column(i) for i in keep_idx] + [
+                        pa.array(col, type=pat) for dst, pat in zip(full, out_pa) for col in dst
+                    ]
+                    yield pa.RecordBatch.from_arrays(arrays, names=keep_cols + out_names)
 
-        if skip_nodata:
-            mask = ff.nodata_mask()
-            valid = df.filter(~mask)
-            applied = valid.mapInPandas(kernel, schema=schema)
-            masked = df.filter(mask).select(
-                *[F.col(c) for c in keep_cols],
-                *[
-                    F.lit(o.resolved_nodata()).cast(o.dtype).alias(n)
-                    for o in outputs
-                    for n in o.names
-                ],
-            )
-            result = applied.unionByName(masked)
-        else:
-            result = df.mapInPandas(kernel, schema=schema)
+        src = df.select("*", ff.nodata_mask().alias("_nodata_mask")) if skip_nodata else df
+        result = src.mapInArrow(kernel, schema=schema)
 
         out_ff = FeatureFrame(
             df=result,
-            features=tuple(n for o in outputs for n in o.names),
+            features=tuple(out_names),
             nodata_input={
-                n: (None if isinstance(nd := o.resolved_nodata(), float) and np.isnan(nd) else nd)
-                for o in outputs
-                for n in o.names
+                n: cval for o, cval in zip(outputs, out_collision_vals) for n in o.names
             },
             metadata=dict(ff.metadata),
         )

@@ -198,6 +198,55 @@ def test_multi_output_ufunc(spark):
     np.testing.assert_allclose(out["squared"], [1, 4, 9, 16])
 
 
+def test_ufunc_round_trips_nan_like_compiled_path(spark):
+    """NaN is a value, not a NULL: a float passthrough column comes back
+    unchanged on valid and masked rows alike, and a NaN the kernel
+    computes for a valid row is written as computed, as the compiled
+    path's when(mask, nodata).otherwise(expr) writes it."""
+    nan = float("nan")
+    extra = [nan, 1.5, nan, 2.5]
+    sdf = spark.createDataFrame(
+        [(0, extra[0], 1.0), (1, extra[1], -1.0), (2, extra[2], nan), (3, extra[3], 4.0)],
+        "id long, extra double, a double",  # row 2 is NoData
+    )
+    assert sdf.filter("extra IS NULL").count() == 0  # NaN cells, not NULL
+    ff = FeatureFrame.from_dataframe(sdf, ["a"])
+
+    def sqrt(X):
+        with np.errstate(invalid="ignore"):
+            return np.sqrt(X[:, 0])  # NaN for the valid row a=-1
+
+    uf = FeaturewiseUfunc(sqrt, [Output(("root",), "double", nodata=-9999.0)])
+    rows = {r["id"]: r for r in uf(ff).df.collect()}
+    for i, want in enumerate(extra):
+        got = rows[i]["extra"]
+        assert got is not None and (np.isnan(got) if np.isnan(want) else got == want), (i, got)
+    assert rows[0]["root"] == 1.0
+    assert rows[1]["root"] is not None and np.isnan(rows[1]["root"])
+    assert rows[2]["root"] == -9999.0
+    assert rows[3]["root"] == 2.0
+
+
+def test_ufunc_without_skip_nodata_fills_and_computes(spark):
+    """skip_nodata=False: a NaN or NULL feature is filled with nan_fill
+    and the row reaches the kernel — its output is computed from the
+    filled value, never set to nodata."""
+    sdf = spark.createDataFrame(
+        [(0, 1.0, 10.0), (1, float("nan"), 20.0), (2, 3.0, 30.0), (3, None, 40.0)],
+        "id long, a double, b double",
+    )
+    ff = FeatureFrame.from_dataframe(sdf, ["a", "b"])
+
+    def total(X):
+        return X.sum(axis=1)
+
+    uf = FeaturewiseUfunc(total, [Output(("total",), "double", nodata=-9999.0)])
+    out = uf(ff, skip_nodata=False, nan_fill=5.0).df.orderBy("id").toPandas()
+    assert out["total"].tolist() == [11.0, 25.0, 33.0, 45.0]
+    masked = uf(ff, nan_fill=5.0).df.orderBy("id").toPandas()
+    assert masked["total"].tolist() == [11.0, -9999.0, 33.0, -9999.0]
+
+
 def test_nodata_output_dtype_validation(spark):
     from sklearn_raster_spark.utils.casting import validate_nodata
 

@@ -39,9 +39,9 @@ def test_no_cartesian_products_or_nested_outputs_anywhere(spark, sf_dir):
             violations.setdefault(name, []).append("CartesianProduct")
         # row-at-a-time Python UDFs are banned engine-wide: every
         # Python boundary must be Arrow-batched (ArrowEvalPython /
-        # MapInPandas / FlatMapGroupsInPandas all pass; BatchEvalPython
-        # is the ~10-100x-slower per-row pickler and means someone used
-        # F.udf instead of pandas_udf/mapInPandas)
+        # MapInArrow / MapInPandas / FlatMapGroupsInPandas all pass;
+        # BatchEvalPython is the ~10-100x-slower per-row pickler and
+        # means someone used F.udf instead of pandas_udf/mapInPandas)
         if "BatchEvalPython" in plan:
             violations.setdefault(name, []).append("BatchEvalPython (row-at-a-time UDF)")
         nested = [

@@ -55,6 +55,21 @@ def test_window_partitions_by_group_key(spark, sf_dir):
     assert "partial" not in plan.lower() or True
 
 
+def test_arrow_inference_scans_source_once(spark, sf_dir):
+    """q40 (Arrow-path inference with NoData): the mask is a column of
+    the one projection over the scan and the kernel scatters nodata
+    itself — one parquet scan of lineitem, one MapInArrow, no Union."""
+    import re
+
+    plan = _plan(spark, sf_dir, "q40_linear_inference_nodata")
+    scans = re.findall(r"\(\d+\) Scan parquet", plan)
+    assert len(scans) == 1, scans
+    assert re.search(r"Location: InMemoryFileIndex \[[^\]]*lineitem", plan)
+    assert len(re.findall(r"\(\d+\) MapInArrow", plan)) == 1
+    assert "MapInPandas" not in plan
+    assert "Union" not in plan
+
+
 def test_agg_is_partial_then_final(spark, sf_dir):
     plan = _plan(spark, sf_dir, "q01_pricing_summary")
     assert plan.count("HashAggregate") >= 2  # map-side partial + final
