@@ -239,9 +239,9 @@ class FeaturewiseUfunc:
                                     f"output shape {arr.shape} != ({nv}, {len(dst)})"
                                 )
                             dst[:, rows] = arr.T.astype(npdt, copy=False)
-                            if cval is not None:
+                            if cval is not None and collision_counter is not None:
                                 hits += int((arr == cval).sum())
-                        if hits and collision_counter is not None:
+                        if hits:
                             collision_counter.add(hits)
                     arrays = [batch.column(i) for i in keep_idx] + [
                         pa.array(col, type=pat) for dst, pat in zip(full, out_pa) for col in dst
