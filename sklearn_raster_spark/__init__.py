@@ -13,22 +13,21 @@ Layers:
 - ``features``    FeatureFrame: names + per-feature nodata registry + metadata
                   (reference: src/sklearn_raster/features.py)
 - ``estimator``   SparkEstimator: fit/predict/predict_proba/transform/
-                  inverse_transform/kneighbors (reference: estimator.py)
-- ``ufunc``       FeaturewiseUfunc: generic declared-output batch kernel
+                  inverse_transform/kneighbors, all through one apply
+                  path that picks the compiled, Arrow or LSH backend
+                  (reference: estimator.py)
+- ``ufunc``       FeaturewiseUfunc: generic declared-output batch kernel,
+                  and the result frame every backend returns
                   (reference: ufunc/_base.py)
 - ``operators``   relational / dedup / similarity / text / asof operators
 - ``sources``     parquet table catalog
 - ``streaming``   Structured Streaming variants of the events operators
 """
 
+from sklearn_raster_spark.estimator import SparkEstimator, wrap
+from sklearn_raster_spark.features import FeatureFrame
 from sklearn_raster_spark.session import get_spark
-
-try:  # inference layer (M1) — optional at import time during the build
-    from sklearn_raster_spark.features import FeatureFrame
-    from sklearn_raster_spark.estimator import SparkEstimator, wrap
-    from sklearn_raster_spark.ufunc import FeaturewiseUfunc, Output
-except ModuleNotFoundError:  # pragma: no cover
-    pass
+from sklearn_raster_spark.ufunc import FeaturewiseUfunc, Output
 
 __version__ = "0.1.0"
 

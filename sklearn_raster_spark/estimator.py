@@ -3,10 +3,16 @@ FeatureFrame, distributed.
 
 Reference parity: src/sklearn_raster/estimator.py wraps an estimator so
 predict / predict_proba / transform / inverse_transform / kneighbors
-run batch-wise over an n-d array with NoData handling. Here the batch
-engine is ``FeaturewiseUfunc`` (one ``mapInArrow`` pass that skips NoData
-rows and scatters the nodata encoding back itself) and the model ships
-to executors via ``SparkContext.broadcast`` once, not per task.
+run batch-wise over an n-d array with NoData handling. Here every method
+runs through one ``SparkEstimator._apply``: it checks the fit, turns a
+DataFrame into a FeatureFrame, validates feature names, then picks a
+backend — Catalyst expressions when the model can compile the method
+(``*_to_spark_columns``), the LSH bucket join for approximate
+kneighbors, else ``FeaturewiseUfunc`` (one ``mapInArrow`` pass that
+skips NoData rows and scatters the nodata encoding back itself) with
+the model broadcast to executors once, not per task. Every backend
+builds its result through ``ufunc.output_frame``, so the output NoData
+registry is derived from the declared ``Output`` list in one place.
 
 The wrapped estimator is duck-typed (fit/predict/...); no sklearn
 import is required — any object with the method works, including the
@@ -26,22 +32,21 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from sklearn_raster_spark.features import FeatureFrame
-from sklearn_raster_spark.ufunc import FeaturewiseUfunc, Output
+from sklearn_raster_spark.ufunc import FeaturewiseUfunc, Output, output_frame
 
-_INT32_MIN = -(2**31)
+# method -> the model hook that compiles it to Catalyst expressions
+_COMPILED_HOOKS = {
+    "predict": "to_spark_columns",
+    "transform": "transform_to_spark_columns",
+    "inverse_transform": "inverse_transform_to_spark_columns",
+}
 
 
 class NotFittedError(RuntimeError):
     pass
-
-
-def out_nd_collidable(out: Output) -> bool:
-    """True when the output's NoData encoding could collide with a valid
-    value (i.e. it is not NaN — NaN never equals a valid float)."""
-    nd = out.resolved_nodata()
-    return not (isinstance(nd, float) and np.isnan(nd))
 
 
 def warn_if_output_collisions(result: FeatureFrame) -> int:
@@ -216,7 +221,7 @@ class SparkEstimator:
         if fit_names is None:
             warnings.warn(
                 "estimator was fitted without feature names; applying to named columns",
-                stacklevel=3,
+                stacklevel=4,
             )
             return
         if tuple(names) == tuple(fit_names):
@@ -238,7 +243,7 @@ class SparkEstimator:
             return kind
         return "unknown"
 
-    # -- the generic apply path ----------------------------------------
+    # -- the one apply path --------------------------------------------
 
     def _apply(
         self,
@@ -246,32 +251,77 @@ class SparkEstimator:
         method: str,
         outputs: list[Output],
         features: Sequence[str] | None = None,
-        call=None,
+        *,
+        fit_names: bool = True,
+        compile_expressions: bool = False,
+        lsh: bool = False,
+        count_collisions: bool = False,
+        method_kwargs: dict | None = None,
         **ufunc_kwargs,
     ) -> FeatureFrame:
+        """Run ``estimator.<method>`` over ``ff`` into ``outputs``.
+
+        ``fit_names`` says whether the input columns are the fit-time
+        features: they name a DataFrame's features when ``features`` is
+        not given, and a FeatureFrame's features must match them. Off
+        for inverse_transform, whose inputs are transformed columns.
+
+        Backends, each producing the same NoData scatter-back:
+        - compiled: ``compile_expressions`` and the model has the
+          method's ``*_to_spark_columns`` hook — Catalyst expressions,
+          one ``when(mask, nodata).otherwise(expr)`` per output, whole-
+          stage codegen and no Python boundary;
+        - lsh: kneighbors as an LSH bucket join (``_kneighbors_lsh``);
+        - Arrow: otherwise — the model is broadcast once and
+          ``FeaturewiseUfunc`` runs ``model.<method>(X, **method_kwargs)``
+          per batch. ``count_collisions`` counts valid outputs equal to
+          a registered encoding into an accumulator that
+          ``warn_if_output_collisions`` reads."""
         _require_fitted(self)
         _require_method(self.estimator, method)
+        known = self.feature_names_in_ if fit_names else None
         if isinstance(ff, DataFrame):
             if features is None:
-                if self.feature_names_in_ is None:
+                if known is None:
                     raise ValueError("pass features= when the model has no fitted names")
-                features = list(self.feature_names_in_)
+                features = known
             ff = FeatureFrame.from_dataframe(ff, features)
-        self._check_feature_names(ff.features)
+        if fit_names:
+            self._check_feature_names(ff.features)
 
-        m = method
-
-        if call is None:
-            # broadcast only on the default path: callers passing their
-            # own `call` closure already hold their own broadcast
-            # (kneighbors ships the fit set once, not twice)
+        hook = getattr(self.estimator, _COMPILED_HOOKS[method], None) if compile_expressions else None
+        if lsh:
+            df = self._kneighbors_lsh(ff, outputs, **ufunc_kwargs)
+            op = "kneighbors:lsh"
+        elif callable(hook):
+            exprs = hook(list(ff.features))
+            slots = [(n, o) for o in outputs for n in o.names]
+            if len(exprs) != len(slots):
+                raise ValueError(f"compiled {len(exprs)} expressions for {len(slots)} outputs")
+            mask = ff.nodata_mask()
+            passthrough = [c for c in ff.df.columns if c not in ff.features]
+            df = ff.df.select(
+                *passthrough,
+                *(
+                    F.when(mask, F.lit(o.resolved_nodata())).otherwise(e).cast(o.dtype).alias(n)
+                    for e, (n, o) in zip(exprs, slots)
+                ),
+            )
+            op = f"{method}:compiled"
+        else:
+            if count_collisions and any(o.registered_nodata() is not None for o in outputs):
+                ufunc_kwargs["collision_counter"] = ff.df.sparkSession.sparkContext.accumulator(0)
             bc = ff.df.sparkSession.sparkContext.broadcast(self.estimator)
+            kw = method_kwargs or {}
 
-            def call(X):  # default: single-output method
-                return getattr(bc.value, m)(X)
-        kernel = call
-        kernel.__name__ = m
-        return FeaturewiseUfunc(kernel, outputs)(ff, **ufunc_kwargs)
+            def kernel(X):
+                return getattr(bc.value, method)(X, **kw)
+
+            df = FeaturewiseUfunc(kernel, outputs).map_batches(ff, **ufunc_kwargs)
+            op = f"ufunc:{method}"
+        result = output_frame(df, outputs, ff, op)
+        result._collision_acc = ufunc_kwargs.get("collision_counter")
+        return result
 
     # -- public surface (reference E3-E7) -------------------------------
 
@@ -296,62 +346,15 @@ class SparkEstimator:
         dtype = "int" if kind in ("classifier", "clusterer") else "double"
         names = self.target_names_in_ if kind not in ("clusterer",) else ("cluster",)
         out = Output(tuple(names), dtype=dtype, nodata=nodata_output)
-        if compile_expressions and callable(getattr(self.estimator, "to_spark_columns", None)):
-            _require_fitted(self)  # before the name check: unfitted has no names
-            self._check_feature_names(
-                ff.features if isinstance(ff, FeatureFrame) else (features or self.feature_names_in_)
-            )
-            return self._apply_compiled(ff, [out], self.estimator.to_spark_columns, "predict", features=features)
-        acc = None
-        if check_output_for_nodata and out_nd_collidable(out):
-            spark = (ff.df if isinstance(ff, FeatureFrame) else ff).sparkSession
-            acc = spark.sparkContext.accumulator(0)
-            kw["collision_counter"] = acc
-        result = self._apply(ff, "predict", [out], features=features, **kw)
-        if acc is not None:
-            result._collision_acc = acc
-        return result
-
-    def _apply_compiled(self, ff, outputs: list[Output], compile_fn, op: str, features=None) -> FeatureFrame:
-        """Expression-compiled scoring: ``compile_fn(feature_cols)`` emits
-        Catalyst column expressions, so the model runs inside whole-stage
-        codegen with ZERO Python boundary. NoData semantics are identical
-        to the Arrow kernel's skip/scatter — one
-        when(mask, nodata).otherwise(expr) per output. Callers check feature
-        names first (inverse_transform's inputs are transformed columns,
-        so it skips that check)."""
-        import pyspark.sql.functions as F
-
-        _require_fitted(self)
-        if isinstance(ff, DataFrame):
-            ff = FeatureFrame.from_dataframe(ff, list(features or self.feature_names_in_))
-        exprs = compile_fn(list(ff.features))
-        names = [n for o in outputs for n in o.names]
-        if len(exprs) != len(names):
-            raise ValueError(f"compiled {len(exprs)} expressions for {len(names)} outputs")
-        mask = ff.nodata_mask()
-        dtypes = [o.dtype for o in outputs for _ in o.names]
-        nodatas = [o.resolved_nodata() for o in outputs for _ in o.names]
-        passthrough = [c for c in ff.df.columns if c not in ff.features]
-        cols = [
-            F.when(mask, F.lit(nd)).otherwise(e).cast(dt).alias(n)
-            for e, n, dt, nd in zip(exprs, names, dtypes, nodatas)
-        ]
-        result = FeatureFrame(
-            df=ff.df.select(*passthrough, *cols),
-            features=tuple(names),
-            # register the just-written sentinels (NaN -> None), exactly
-            # like the UDF path (ufunc.py) — with {} the masked rows
-            # would read as VALID downstream and a chained op would
-            # consume the sentinel as a real value
-            nodata_input={
-                n: (None if isinstance(nd, float) and np.isnan(nd) else nd)
-                for n, nd in zip(names, nodatas)
-            },
-            metadata=dict(ff.metadata),
+        return self._apply(
+            ff,
+            "predict",
+            [out],
+            features,
+            compile_expressions=compile_expressions,
+            count_collisions=check_output_for_nodata,
+            **kw,
         )
-        result._append_history(f"{op}:compiled")
-        return result
 
     def predict_proba(self, ff, features=None, nodata_output=None, **kw) -> FeatureFrame:
         _require_method(self.estimator, "predict_proba")
@@ -360,20 +363,13 @@ class SparkEstimator:
             raise NotImplementedError("predict_proba requires fitted classes_")
         names = tuple(f"proba_{c}" for c in classes)
         out = Output(names, dtype="double", nodata=nodata_output)
-        return self._apply(ff, "predict_proba", [out], features=features, **kw)
+        return self._apply(ff, "predict_proba", [out], features, **kw)
 
     def transform(self, ff, features=None, nodata_output=None, compile_expressions=True, **kw) -> FeatureFrame:
         _require_method(self.estimator, "get_feature_names_out")
         names = tuple(map(str, self.estimator.get_feature_names_out()))
         out = Output(names, dtype="double", nodata=nodata_output)
-        if compile_expressions and callable(getattr(self.estimator, "transform_to_spark_columns", None)):
-            self._check_feature_names(
-                ff.features if isinstance(ff, FeatureFrame) else (features or self.feature_names_in_)
-            )
-            return self._apply_compiled(
-                ff, [out], self.estimator.transform_to_spark_columns, "transform", features=features
-            )
-        return self._apply(ff, "transform", [out], features=features, **kw)
+        return self._apply(ff, "transform", [out], features, compile_expressions=compile_expressions, **kw)
 
     def inverse_transform(self, ff, features=None, nodata_output=None, compile_expressions=True, **kw) -> FeatureFrame:
         if self.feature_names_in_ is not None:
@@ -381,21 +377,15 @@ class SparkEstimator:
         else:
             names = tuple(f"feature_{i}" for i in range(self.n_features_in_ or 0))
         out = Output(names, dtype="double", nodata=nodata_output)
-        if compile_expressions and callable(
-            getattr(self.estimator, "inverse_transform_to_spark_columns", None)
-        ):
-            return self._apply_compiled(
-                ff, [out], self.estimator.inverse_transform_to_spark_columns, "transform", features=features
-            )
-        # inverse input features are the TRANSFORMED columns, so skip the
-        # fit-name check by clearing expectations for this call
-        saved, self.feature_names_in_ = self.feature_names_in_, None
-        try:
-            with warnings.catch_warnings():
-                warnings.simplefilter("ignore")
-                return self._apply(ff, "inverse_transform", [out], features=features, **kw)
-        finally:
-            self.feature_names_in_ = saved
+        return self._apply(
+            ff,
+            "inverse_transform",
+            [out],
+            features,
+            fit_names=False,
+            compile_expressions=compile_expressions,
+            **kw,
+        )
 
     # fit sets at or below this row count broadcast comfortably; larger
     # ones route to the LSH similarity join under method="auto"
@@ -425,43 +415,30 @@ class SparkEstimator:
           the 100 TB path when the fit set outgrows a broadcast.
         - "auto": exact while the fit set is broadcastable, else lsh.
         """
-        _require_fitted(self)
-        _require_method(self.estimator, "kneighbors")
-        k = n_neighbors or getattr(self.estimator, "n_neighbors", 5)
-
         if method not in ("auto", "exact", "lsh"):
             raise ValueError(f"method must be auto/exact/lsh, got {method!r}")
+        k = n_neighbors or getattr(self.estimator, "n_neighbors", 5)
         if method == "auto":
             n_fit = len(getattr(self.estimator, "_X", ()))
             method = "exact" if n_fit <= self.KNN_BROADCAST_MAX_ROWS else "lsh"
-        if method == "lsh":
-            return self._kneighbors_lsh(
-                ff, k, return_distance=return_distance, features=features, **kw
-            )
-
-        dist_out = Output(tuple(f"dist_{i}" for i in range(1, k + 1)), "double", nodata=float("nan"))
-        idx_out = Output(tuple(f"idx_{i}" for i in range(1, k + 1)), "int", nodata=_INT32_MIN)
-
-        spark = (ff.df if isinstance(ff, FeatureFrame) else ff).sparkSession
-        bc = spark.sparkContext.broadcast(self.estimator)
-
-        if return_distance:
-            def call(X):
-                dist, idx = bc.value.kneighbors(X, n_neighbors=k, return_distance=True)
-                return dist, idx
-            outputs = [dist_out, idx_out]
-        else:
-            def call(X):
-                return bc.value.kneighbors(X, n_neighbors=k, return_distance=False)
-            outputs = [idx_out]
-        return self._apply(ff, "kneighbors", outputs, features=features, call=call, **kw)
+        # default encodings by dtype: NaN distances, int32-min indices
+        dist_out = Output(tuple(f"dist_{i}" for i in range(1, k + 1)), "double")
+        idx_out = Output(tuple(f"idx_{i}" for i in range(1, k + 1)), "int")
+        outputs = [dist_out, idx_out] if return_distance else [idx_out]
+        return self._apply(
+            ff,
+            "kneighbors",
+            outputs,
+            features,
+            lsh=method == "lsh",
+            method_kwargs={"n_neighbors": k, "return_distance": return_distance},
+            **kw,
+        )
 
     def _kneighbors_lsh(
         self,
-        ff,
-        k: int,
-        return_distance: bool = True,
-        features=None,
+        ff: FeatureFrame,
+        outputs: list[Output],
         bucket_length: float = 2.0,
         # 4 OR-amplified tables: measured recall 0.97 vs the exact path
         # on the driver embeddings (6 tables: 0.996 at ~2x the join
@@ -490,11 +467,12 @@ class SparkEstimator:
         nan_fill: float | None = 0.0,
         keep_features: bool = False,
         collision_counter=None,
-    ) -> FeatureFrame:
+    ) -> DataFrame:
         """Approximate kneighbors as an LSH bucket join (euclidean, same
-        metric as the exact path): both sides are hashed with
-        ``BucketedRandomProjectionLSH``'s hash function, candidates form
-        where ANY of the ``num_hash_tables`` buckets agree
+        metric as the exact path) into ``outputs`` (the idx group last,
+        optionally preceded by the dist group): both sides are hashed
+        with ``BucketedRandomProjectionLSH``'s hash function, candidates
+        form where ANY of the ``num_hash_tables`` buckets agree
         (OR-amplification), and each row keeps its top-k by
         (distance, fit_idx). Rows whose buckets caught fewer than k
         candidates carry the per-output nodata (nan / int32 min) in the
@@ -505,14 +483,12 @@ class SparkEstimator:
         over struct<id, vector, hashes> on both sides) and re-evaluates
         the distance UDF per pair; here the hashing is the SAME family
         (h = floor(x·v / bucketLength), unit-norm Gaussian v, seeded) as
-        ``BucketedRandomProjectionLSH`` but evaluated as plain column
-        expressions — fit-side keys come straight out of numpy on the
-        driver (the fit set is already local), query-side dots are JVM
-        zip_with folds against literal hyperplanes, so no ML pipeline
+        ``BucketedRandomProjectionLSH`` but evaluated without an ML
+        pipeline — fit-side keys come straight out of numpy on the
+        driver (the fit set is already local), query-side dots run in
+        one vectorized kernel against literal hyperplanes, so no
         fit/transform jobs and no vector-UDF round-trips sit in the hot
         path — same candidates, same recall, a fraction of the overhead."""
-        import pyspark.sql.functions as F
-
         if skip_nodata is False:
             raise NotImplementedError(
                 "kneighbors(method='lsh') always skips NoData rows (they "
@@ -522,9 +498,6 @@ class SparkEstimator:
         del inner_thread_limit  # accepted for exact-path parity; no Python kernel here
         del collision_counter  # accepted for parity; LSH outputs cannot collide (see above)
         del nan_fill  # accepted for parity; only meaningful under skip_nodata=False (raises here)
-        if isinstance(ff, DataFrame):
-            ff = FeatureFrame.from_dataframe(ff, list(features or self.feature_names_in_))
-        self._check_feature_names(ff.features)
         if ensure_min_samples > 1:
             # reference O6 (mirrors ufunc.py): a minimum above the TOTAL
             # row count can never be satisfied by unmasking
@@ -534,13 +507,9 @@ class SparkEstimator:
                     f"Cannot ensure {ensure_min_samples} samples: the input "
                     f"has only {total} rows in total."
                 )
+        k = len(outputs[-1].names)
         fit_X = np.asarray(getattr(self.estimator, "_X"), dtype=np.float64)
         spark = ff.df.sparkSession
-
-        # (r12: the fit-row DataFrame upload that fed the old per-pair
-        # distance join is gone — the top-k kernel carries fit_X in its
-        # task closure instead; see knn_topk_map below.)
-        import pandas as pd
 
         # Seeded unit-norm Gaussian hyperplanes (the same projection
         # family BucketedRandomProjectionLSH draws; numpy-side so both
@@ -589,27 +558,19 @@ class SparkEstimator:
         )
         vec = data.filter(~ff.nodata_mask()).select("_rid", arr_expr.alias("arr"))
 
-        # Query-side bucket ids as pure codegen: dot(arr, plane_t) via a
-        # zip_with fold against the literal plane (one expr STRING per
-        # plane — building 64 lit Columns per plane through py4j costs
-        # more driver time than the whole local execution), floored into
-        # buckets. The query side CARRIES its feature array through the
-        # explode: the bucket join below is broadcast (fit side is the
-        # small one), so scan -> hash -> explode -> join -> candidate-set
-        # aggregate fuses into ONE map-side stage — no shuffle of
-        # candidate pairs, no join back to the query vectors. (Round 3
-        # shipped the pair distinct + re-join formulation: two extra
-        # full-candidate shuffles, plus ML-pipeline hashing overhead.)
-        # r12 OPT (guide §4.2): the per-plane zip_with/aggregate dots ran
-        # INTERPRETED (num_hash_tables x dim boxed lambda calls per row);
-        # plane_dots_kernel computes the identical sequential-fold
-        # float64 dots vectorized (bit-equality pinned by
-        # tests/test_fold_kernels.py), so floor(dot / bucket_length)
-        # lands every row in the IDENTICAL bucket. The old expression
-        # string remains the semantic reference:
+        # Query-side bucket ids: floor(dot(arr, plane_t) / bucket_length)
+        # per table. plane_dots_kernel evaluates each dot as the same
+        # sequential float64 fold as the SQL expression
         #   CAST(FLOOR(aggregate(zip_with(arr, array(<plane lits>),
         #        (x, p) -> x * p), 0D, (acc, x) -> acc + x) / <len>D)
         #        AS LONG)
+        # (bit-equality pinned by tests/test_fold_kernels.py), so every
+        # row lands in the bucket that expression defines. The query
+        # side CARRIES its feature array through the explode: the
+        # bucket join below is broadcast (fit side is the small one), so
+        # scan -> hash -> explode -> join -> candidate-set aggregate
+        # fuses into ONE map-side stage — no shuffle of candidate pairs,
+        # no join back to the query vectors.
         from sklearn_raster_spark.utils.fold_kernels import (
             knn_topk_map,
             plane_dots_kernel,
@@ -631,63 +592,37 @@ class SparkEstimator:
         # per table, and the partial (map-side) hash aggregate of the
         # groupBy collapses duplicates locally — the exchange carries ONE
         # slim row per query row per input partition (candidate-idx set
-        # + its feature array), not candidate pairs. (Round 3 shipped a
-        # pair-level distinct + re-join formulation: two full-candidate
-        # shuffles that dominated the driver bench.)
+        # + its feature array), not candidate pairs.
         cand_sets = q_keys.join(F.broadcast(fit_keys), ["_tbl", "_bucket"]).groupBy(
             "_rid"
         ).agg(
             F.collect_set("fit_idx").alias("cand_idx"),
             F.first("arr").alias("arr"),  # identical across a _rid's rows
         )
-        # r12 OPT (guide §4.2/§2.3): distance + top-k now run in ONE
-        # mapInArrow kernel over the aggregated candidate sets — each
-        # query row crosses the Python boundary once with its candidate
-        # ID SET (never per pair: the §5-rejected pair-level kernel
-        # shipped both 64-dim vectors per candidate pair and lost 4-6x).
-        # Replaces, per row: |cand| interpreted 64-element folds
-        # (explode + broadcast fit_arrs join) and a collect_list +
-        # array_sort aggregate. Bit-identical (dist values, tie order,
-        # padding) — pinned by tests/test_fold_kernels.py::test_knn_topk.
+        # Distance + top-k run in ONE mapInArrow kernel over the
+        # aggregated candidate sets: each query row crosses the Python
+        # boundary once with its candidate ID SET, never once per pair.
+        # Bit-identical dist values, tie order and padding to the exact
+        # brute force (tests/test_fold_kernels.py::test_knn_topk).
         # cand_sets left the exchange hash-partitioned on _rid and
         # mapInArrow preserves partitioning, so the scatter-back join
-        # below still reuses that layout. One shuffle end-to-end on the
-        # candidate path; the fit-row join side is gone.
+        # below reuses that layout: one shuffle on the candidate path.
         topk = knn_topk_map(
             cand_sets.select("_rid", "arr", "cand_idx"), fit_X, k
         )
-        dist_cols = [
-            F.coalesce(F.col(f"dist_{i}"), F.lit(float("nan"))).alias(f"dist_{i}")
-            for i in range(1, k + 1)
+        out_cols = [
+            F.coalesce(F.col(n), F.lit(o.resolved_nodata())).alias(n)
+            for o in outputs
+            for n in o.names
         ]
-        idx_cols = [
-            F.coalesce(F.col(f"idx_{i}"), F.lit(_INT32_MIN)).alias(f"idx_{i}")
-            for i in range(1, k + 1)
-        ]
-        out_cols = (dist_cols + idx_cols) if return_distance else idx_cols
         # keep_features mirrors the exact path's passthrough columns
-        # (FeaturewiseUfunc.__call__)
+        # (FeaturewiseUfunc.map_batches)
         passthrough = [
             c
             for c in data.columns
             if c != "_rid" and (keep_features or c not in ff.features)
         ]
-        out_df = (
-            data.join(topk, "_rid", "left")
-            .select(*passthrough, *out_cols)
-        )
-        names = tuple(
-            ([f"dist_{i}" for i in range(1, k + 1)] if return_distance else [])
-            + [f"idx_{i}" for i in range(1, k + 1)]
-        )
-        result = FeatureFrame(
-            df=out_df,
-            features=names,
-            nodata_input={n: (_INT32_MIN if n.startswith("idx_") else None) for n in names},
-            metadata=dict(ff.metadata),
-        )
-        result._append_history("kneighbors:lsh")
-        return result
+        return data.join(topk, "_rid", "left").select(*passthrough, *out_cols)
 
 
 def wrap(estimator: Any) -> SparkEstimator:

@@ -51,12 +51,12 @@ class StandardScalerNP:
     def transform_to_spark_columns(self, feature_cols):
         """Compile transform to Catalyst expressions (affine per column).
 
-        r12 OPT (guide §7.3, the _embedding_frame lesson): built as
-        parsed SQL strings, not chained Column ops — each py4j Column
-        call costs ~1 ms of driver time and the wide frames hit this
-        64 times per output; F.expr parses to the IDENTICAL tree
-        (repr() round-trips float64 exactly, left-assoc chains match
-        the old loop order), pinned by tests/test_fold_kernels.py::
+        Built as parsed SQL strings, not chained Column ops: each py4j
+        Column call costs ~1 ms of driver time and the wide frames hit
+        this 64 times per output. F.expr parses to the IDENTICAL tree as
+        the Column form (repr() round-trips float64 exactly, and the
+        left-assoc chains keep the Column form's order), pinned by
+        tests/test_fold_kernels.py::
         test_compiled_expression_strings_match_column_form."""
         from pyspark.sql import functions as F
 
@@ -106,10 +106,10 @@ class PCANP:
         the scaler/linear compiled paths)."""
         from pyspark.sql import functions as F
 
-        # r12 OPT (guide §7.3): parsed strings, not n_components x dim
-        # chained Column ops — see StandardScalerNP.transform_to_spark_
-        # columns; "0.0D + t1 + t2 ..." parses left-associative, the
-        # exact Add chain the old F.lit(0.0) + ... loop built.
+        # parsed strings, not n_components x dim chained Column ops —
+        # see StandardScalerNP.transform_to_spark_columns; "0.0D + t1 +
+        # t2 ..." parses left-associative, the exact Add chain of the
+        # Column form F.lit(0.0) + t1 + t2 ...
         out = []
         for j in range(self.n_components):
             terms = "0.0D" + "".join(
@@ -156,8 +156,8 @@ class LinearRegressionNP:
 
         coef = np.atleast_2d(self.coef_.T if self.coef_.ndim > 1 else self.coef_)
         intercept = np.atleast_1d(self.intercept_)
-        # r12 OPT (guide §7.3): parsed strings, not chained Column ops
-        # (see StandardScalerNP) — identical left-assoc Add chain
+        # parsed strings, not chained Column ops (see StandardScalerNP)
+        # — the identical left-assoc Add chain
         out = []
         for t in range(coef.shape[0]):
             terms = _sql_double(intercept[t]) + "".join(

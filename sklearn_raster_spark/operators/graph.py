@@ -416,6 +416,49 @@ PAGERANK_ITERS = 8
 PAGERANK_DAMPING = 0.85
 
 
+def _pagerank(spark: SparkSession, sf_dir: str, rank: str, arithmetic) -> DataFrame:
+    """The PageRank loop both twins run: (node, ``rank``) after
+    ``PAGERANK_ITERS`` power iterations over the symmetrized co-purchase
+    graph. ``arithmetic(n_nodes)`` returns the twin's three Columns: the
+    initial rank, the per-edge contribution ``c`` (over ``rank`` and the
+    source's out-degree ``deg``) and the per-target aggregate of ``c``.
+
+    The loop runs a FIXED iteration count with no data-dependent
+    decision, so it builds one lazy plan executed by the final action;
+    each groupBy is already a materialized shuffle boundary, the natural
+    recovery point, so no per-iteration checkpoint is taken. The graph
+    is symmetric and edge-defined, so every node has an in-edge and the
+    inner join + aggregate covers all |V| nodes (the q159 oracle relies
+    on the same invariant)."""
+    # checkpoint the directed pairs and symmetrize lazily (as in
+    # connected_components): half the checkpoint, and the pair
+    # lineage's post-exchange tail runs once instead of once per branch
+    pairs = _copurchase_pairs(spark, sf_dir).localCheckpoint(eager=True)
+    edges = pairs.unionByName(
+        pairs.select(F.col("pb").alias("pa"), F.col("pa").alias("pb"))
+    )
+    deg = edges.groupBy(F.col("pa").alias("node")).agg(F.count(F.lit(1)).alias("deg"))
+    # lazy: the count() right below is the materializing action, so an
+    # eager checkpoint would run the same |V| aggregate twice
+    deg = deg.localCheckpoint(eager=False)  # feeds n_nodes count AND the edge join
+    n_nodes = deg.count()
+    init, contribution, aggregate = arithmetic(n_nodes)
+    ranks = deg.select("node", init.alias(rank))
+    edges_deg = (
+        edges.join(deg, edges.pa == deg.node)
+        .select("pa", "pb", "deg")
+        .localCheckpoint(eager=True)
+    )
+    for _ in range(PAGERANK_ITERS):
+        ranks = (
+            edges_deg.join(ranks, edges_deg.pa == ranks.node)
+            .select(F.col("pb").alias("node"), contribution.alias("c"))
+            .groupBy("node")
+            .agg(aggregate.alias(rank))
+        )
+    return ranks
+
+
 @query(
     "q120_pagerank",
     doc="PageRank over the part co-purchase graph (q84's edge set), "
@@ -433,46 +476,14 @@ PAGERANK_DAMPING = 0.85
         "iteration monotonicity).",
 )
 def q120_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r12 OPT: checkpoint directed pairs, symmetrize lazily (see
-    # connected_components — halves the checkpoint, runs the pair
-    # lineage's post-exchange tail once instead of once per branch)
-    pairs = _copurchase_pairs(spark, sf_dir).localCheckpoint(eager=True)
-    edges = pairs.unionByName(
-        pairs.select(F.col("pb").alias("pa"), F.col("pa").alias("pb"))
-    )
-    deg = edges.groupBy(F.col("pa").alias("node")).agg(F.count(F.lit(1)).alias("deg"))
-    # LAZY checkpoint (r13, guide §5): the count() right below is the
-    # materializing action (computes every partition), so the eager
-    # form ran the same |V| aggregate twice back-to-back
-    deg = deg.localCheckpoint(eager=False)  # feeds n_nodes count AND the edge join
-    n_nodes = deg.count()
-    ranks = deg.select("node", F.lit(1.0 / n_nodes).alias("rank"))
-    edges_deg = (
-        edges.join(deg, edges.pa == deg.node)
-        .select("pa", "pb", "deg")
-        .localCheckpoint(eager=True)
-    )
-    teleport = (1.0 - PAGERANK_DAMPING) / n_nodes
-    # r12 OPT (guide §2.4/§5): the loop runs a FIXED iteration count with
-    # no data-dependent decisions, so per-iteration localCheckpoints were
-    # pure overhead — each groupBy already materializes a shuffle
-    # boundary (the natural recovery point), and one lazy 8-level plan
-    # executes in a single job. The per-iteration nodes left join is
-    # also gone: the graph is symmetric and edge-defined, so every node
-    # has an in-edge and the contribution aggregate covers all |V| nodes
-    # (the q159 invariant; coalesce never fired). Measured 4.6 -> 2.9 s
-    # at sf0.1 with max |rank delta| = 0.0 vs the checkpointed form.
-    for _ in range(PAGERANK_ITERS):
-        ranks = (
-            edges_deg.join(ranks, edges_deg.pa == ranks.node)
-            .select(F.col("pb").alias("node"), (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy("node")
-            .agg(
-                (
-                    F.lit(teleport) + F.lit(PAGERANK_DAMPING) * F.sum("c")
-                ).alias("rank")
-            )
+    def arithmetic(n_nodes):
+        return (
+            F.lit(1.0 / n_nodes),
+            F.col("rank") / F.col("deg"),
+            F.lit((1.0 - PAGERANK_DAMPING) / n_nodes) + F.lit(PAGERANK_DAMPING) * F.sum("c"),
         )
+
+    ranks = _pagerank(spark, sf_dir, "rank", arithmetic)
     return ranks.select("node", F.round("rank", 10).alias("rank"))
 
 
@@ -558,43 +569,12 @@ def _pagerank_portable_oracle() -> str:
         "localCheckpoint lineage cuts.",
 )
 def q159_pagerank_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r12 OPT: checkpoint directed pairs, symmetrize lazily (see
-    # connected_components — halves the checkpoint, runs the pair
-    # lineage's post-exchange tail once instead of once per branch)
-    pairs = _copurchase_pairs(spark, sf_dir).localCheckpoint(eager=True)
-    edges = pairs.unionByName(
-        pairs.select(F.col("pb").alias("pa"), F.col("pa").alias("pb"))
-    )
-    deg = edges.groupBy(F.col("pa").alias("node")).agg(F.count(F.lit(1)).alias("deg"))
-    # LAZY checkpoint (r13, guide §5): the count() right below is the
-    # materializing action (computes every partition), so the eager
-    # form ran the same |V| aggregate twice back-to-back
-    deg = deg.localCheckpoint(eager=False)  # feeds n_nodes count AND the edge join
-    n_nodes = deg.count()
-    init = PAGERANK_SCALE // n_nodes
-    tele = (15 * PAGERANK_SCALE // 100) // n_nodes
-    ranks = deg.select("node", F.lit(init).cast("long").alias("r"))
-    edges_deg = (
-        edges.join(deg, edges.pa == deg.node)
-        .select("pa", "pb", "deg")
-        .localCheckpoint(eager=True)
-    )
-    # r12 OPT (guide §2.4/§5): fixed iteration count, no data-dependent
-    # control flow — the per-iteration localCheckpoints were pure
-    # overhead (each groupBy is already a materialized shuffle
-    # boundary), so the 8 iterations now build ONE lazy plan executed
-    # by the final action. Integer arithmetic is order-independent, so
-    # the result is bit-identical (probe: set-equality vs the
-    # checkpointed form; oracle hash unchanged). Measured 4.9 -> 3.5 s
-    # at sf0.1.
-    for _ in range(PAGERANK_ITERS):
-        # symmetric graph: every node has >= 1 in-edge, so the inner
-        # join + groupBy covers all |V| nodes (the oracle relies on the
-        # same invariant)
-        ranks = (
-            edges_deg.join(ranks, edges_deg.pa == ranks.node)
-            .select(F.col("pb").alias("node"), F.expr("r div deg").alias("c"))
-            .groupBy("node")
-            .agg((F.expr("(85 * sum(c)) div 100") + F.lit(tele)).alias("r"))
+    def arithmetic(n_nodes):
+        return (
+            F.lit(PAGERANK_SCALE // n_nodes).cast("long"),
+            F.expr("r div deg"),
+            F.expr("(85 * sum(c)) div 100") + F.lit((15 * PAGERANK_SCALE // 100) // n_nodes),
         )
+
+    ranks = _pagerank(spark, sf_dir, "r", arithmetic)
     return ranks.select(F.col("node").alias("partkey"), F.col("r").alias("rank_e12"))

@@ -21,6 +21,11 @@ Spark-native translation (SURVEY.md O1-O15):
 - ensure_min_samples -> per-batch padding of the valid rows inside the
                       kernel (not expressible relationally; reference
                       ufunc/_base.py:366-382)
+- result frame     -> ``output_frame``: the declared outputs become the
+                      features and register their encodings
+                      (``Output.registered_nodata``). SparkEstimator's
+                      compiled and LSH backends build their results
+                      through it too.
 """
 
 from __future__ import annotations
@@ -31,6 +36,7 @@ from typing import Any, Callable, Sequence
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyspark.sql import DataFrame
 
 from sklearn_raster_spark.features import FeatureFrame
 from sklearn_raster_spark.utils.casting import default_nodata_for, validate_nodata
@@ -117,6 +123,31 @@ class Output:
             return default_nodata_for(self.dtype)
         return validate_nodata(self.nodata, self.dtype)
 
+    def registered_nodata(self):
+        """The encoding a result frame registers in ``nodata_input``, or
+        None for NaN: NaN is implicit NoData for float features and never
+        equals a valid value, so it needs no sentinel and cannot collide
+        (reference O8, ufunc/_base.py:453-466)."""
+        nd = self.resolved_nodata()
+        return None if isinstance(nd, float) and np.isnan(nd) else nd
+
+
+def output_frame(
+    df: DataFrame, outputs: Sequence[Output], source: FeatureFrame, op: str
+) -> FeatureFrame:
+    """The result FeatureFrame of one apply: the declared output columns
+    become the features, each registering its output encoding so masked
+    rows read as NoData downstream (a chained op must never consume a
+    sentinel as a real value); ``op`` is appended to the history."""
+    out = FeatureFrame(
+        df=df,
+        features=tuple(n for o in outputs for n in o.names),
+        nodata_input={n: o.registered_nodata() for o in outputs for n in o.names},
+        metadata=dict(source.metadata),
+    )
+    out._append_history(op)
+    return out
+
 
 class FeaturewiseUfunc:
     """Wrap ``func((n, n_features) ndarray) -> ndarray | tuple`` with
@@ -131,7 +162,12 @@ class FeaturewiseUfunc:
 
     # ------------------------------------------------------------------
 
-    def __call__(
+    def __call__(self, ff: FeatureFrame, **kwargs) -> FeatureFrame:
+        """Apply ``func`` to ``ff``; ``kwargs`` as for ``map_batches``."""
+        name = getattr(self.func, "__name__", "callable")
+        return output_frame(self.map_batches(ff, **kwargs), self.outputs, ff, f"ufunc:{name}")
+
+    def map_batches(
         self,
         ff: FeatureFrame,
         *,
@@ -141,7 +177,9 @@ class FeaturewiseUfunc:
         inner_thread_limit: int | None = 1,
         keep_features: bool = False,
         collision_counter=None,
-    ) -> FeatureFrame:
+    ) -> DataFrame:
+        """The output DataFrame: the kept source columns followed by the
+        declared outputs, computed in one ``mapInArrow`` pass."""
         from sklearn_raster_spark.session import ensure_workers_can_import
 
         ensure_workers_can_import(ff.df.sparkSession)
@@ -174,13 +212,9 @@ class FeaturewiseUfunc:
         out_np = [_NP_DTYPE[o.dtype] for o in outputs]
         out_pa = [pa.from_numpy_dtype(t) for t in out_np]
         out_nodata = [o.resolved_nodata() for o in outputs]
-        # reference O8 (ufunc/_base.py:453-466): detect VALID outputs that
-        # legitimately equal the NoData encoding (indistinguishable from
-        # masked rows downstream). NaN encodings can't collide with valid
-        # values by definition and are skipped.
-        out_collision_vals = [
-            None if isinstance(nd, float) and np.isnan(nd) else nd for nd in out_nodata
-        ]
+        # reference O8: VALID outputs equal to the encoding are counted,
+        # since downstream they are indistinguishable from masked rows
+        out_collision_vals = [o.registered_nodata() for o in outputs]
         # the row mask rides as the last column of the one projection
         # over the source; it is never NULL (isNull ORs into it)
         mask_idx = len(cols) if skip_nodata else None
@@ -249,15 +283,4 @@ class FeaturewiseUfunc:
                     yield pa.RecordBatch.from_arrays(arrays, names=keep_cols + out_names)
 
         src = df.select("*", ff.nodata_mask().alias("_nodata_mask")) if skip_nodata else df
-        result = src.mapInArrow(kernel, schema=schema)
-
-        out_ff = FeatureFrame(
-            df=result,
-            features=tuple(out_names),
-            nodata_input={
-                n: cval for o, cval in zip(outputs, out_collision_vals) for n in o.names
-            },
-            metadata=dict(ff.metadata),
-        )
-        out_ff._append_history(f"ufunc:{getattr(func, '__name__', 'callable')}")
-        return out_ff
+        return src.mapInArrow(kernel, schema=schema)

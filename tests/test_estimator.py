@@ -134,16 +134,40 @@ def test_kneighbors_parity(spark, sdf, train):
     np.testing.assert_array_equal(out[["idx_1", "idx_2", "idx_3"]].to_numpy(), idx_want)
 
 
-def test_feature_name_validation(spark, sdf, train):
+@pytest.mark.parametrize("compiled", [False, True], ids=["mapinpandas", "compiled"])
+def test_feature_name_validation(spark, sdf, train, compiled):
     Xp, y = train
     est = SparkEstimator(LinearRegressionNP()).fit(Xp, y)
     ff_reordered = FeatureFrame.from_dataframe(sdf, ["f1", "f0", "f2"])
     with pytest.raises(ValueError, match="reordered"):
-        est.predict(ff_reordered)
+        est.predict(ff_reordered, compile_expressions=compiled)
     sdf2 = sdf.withColumnRenamed("f2", "other")
     ff_missing = FeatureFrame.from_dataframe(sdf2, ["f0", "f1", "other"])
     with pytest.raises(ValueError, match="mismatch"):
-        est.predict(ff_missing)
+        est.predict(ff_missing, compile_expressions=compiled)
+    # a model fitted on a bare array knows no names: a DataFrame input
+    # needs features=, on either backend
+    unnamed = SparkEstimator(LinearRegressionNP()).fit(Xp.to_numpy(), y.to_numpy())
+    with pytest.raises(ValueError, match="pass features="):
+        unnamed.predict(sdf, compile_expressions=compiled)
+    scaler = SparkEstimator(StandardScalerNP()).fit(Xp.to_numpy())
+    with pytest.raises(ValueError, match="pass features="):
+        scaler.transform(sdf, compile_expressions=compiled)
+
+
+@pytest.mark.parametrize("compile_expressions", [True, False])
+def test_inverse_transform_dataframe_needs_features(spark, sdf, train, compile_expressions):
+    """inverse_transform's inputs are transformed columns, never the fit
+    names: on a DataFrame that holds both, the fit names must not be
+    taken as inputs (that would invert the original columns)."""
+    Xp, _ = train
+    est = SparkEstimator(StandardScalerNP()).fit(Xp)
+    both = est.transform(
+        FeatureFrame.from_dataframe(sdf, FEATURES), compile_expressions=False, keep_features=True
+    ).df
+    assert {*FEATURES, "scaled_0", "scaled_1", "scaled_2"} <= set(both.columns)
+    with pytest.raises(ValueError, match="pass features="):
+        est.inverse_transform(both, compile_expressions=compile_expressions)
 
 
 def test_unfitted_raises(spark, sdf):

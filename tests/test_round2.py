@@ -132,7 +132,9 @@ def test_pca_compiled_matches_numpy(spark):
     # inverse leg: compiled inverse matches the numpy round-trip (the
     # projection onto the component subspace — lossy by design when
     # n_components < n_features)
-    inv = est.inverse_transform(est.transform(ff)).df.orderBy("rid").collect()
+    inv_ff = est.inverse_transform(est.transform(ff))
+    assert inv_ff.metadata["history"][-1].endswith(" inverse_transform:compiled")
+    inv = inv_ff.df.orderBy("rid").collect()
     got_inv = np.array([[r[c] for c in cols] for r in inv])
     want_inv = est.estimator.inverse_transform(est.estimator.transform(X[:50]))
     np.testing.assert_allclose(got_inv, want_inv, rtol=1e-9, atol=1e-12)
