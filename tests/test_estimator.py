@@ -134,25 +134,25 @@ def test_kneighbors_parity(spark, sdf, train):
     np.testing.assert_array_equal(out[["idx_1", "idx_2", "idx_3"]].to_numpy(), idx_want)
 
 
-@pytest.mark.parametrize("compiled", [False, True], ids=["mapinpandas", "compiled"])
-def test_feature_name_validation(spark, sdf, train, compiled):
+def test_feature_name_validation(spark, sdf, train):
     Xp, y = train
     est = SparkEstimator(LinearRegressionNP()).fit(Xp, y)
+    # a model fitted on a bare array knows no names: a DataFrame input
+    # needs features=
+    unnamed = SparkEstimator(LinearRegressionNP()).fit(Xp.to_numpy(), y.to_numpy())
+    scaler = SparkEstimator(StandardScalerNP()).fit(Xp.to_numpy())
     ff_reordered = FeatureFrame.from_dataframe(sdf, ["f1", "f0", "f2"])
-    with pytest.raises(ValueError, match="reordered"):
-        est.predict(ff_reordered, compile_expressions=compiled)
     sdf2 = sdf.withColumnRenamed("f2", "other")
     ff_missing = FeatureFrame.from_dataframe(sdf2, ["f0", "f1", "other"])
-    with pytest.raises(ValueError, match="mismatch"):
-        est.predict(ff_missing, compile_expressions=compiled)
-    # a model fitted on a bare array knows no names: a DataFrame input
-    # needs features=, on either backend
-    unnamed = SparkEstimator(LinearRegressionNP()).fit(Xp.to_numpy(), y.to_numpy())
-    with pytest.raises(ValueError, match="pass features="):
-        unnamed.predict(sdf, compile_expressions=compiled)
-    scaler = SparkEstimator(StandardScalerNP()).fit(Xp.to_numpy())
-    with pytest.raises(ValueError, match="pass features="):
-        scaler.transform(sdf, compile_expressions=compiled)
+    for compiled in (False, True):
+        with pytest.raises(ValueError, match="reordered"):
+            est.predict(ff_reordered, compile_expressions=compiled)
+        with pytest.raises(ValueError, match="mismatch"):
+            est.predict(ff_missing, compile_expressions=compiled)
+        with pytest.raises(ValueError, match="pass features="):
+            unnamed.predict(sdf, compile_expressions=compiled)
+        with pytest.raises(ValueError, match="pass features="):
+            scaler.transform(sdf, compile_expressions=compiled)
 
 
 @pytest.mark.parametrize("compile_expressions", [True, False])
