@@ -4,15 +4,16 @@ FeatureFrame, distributed.
 Reference parity: src/sklearn_raster/estimator.py wraps an estimator so
 predict / predict_proba / transform / inverse_transform / kneighbors
 run batch-wise over an n-d array with NoData handling. Here every method
-runs through one ``SparkEstimator._apply``: it checks the fit, turns a
-DataFrame into a FeatureFrame, validates feature names, then picks a
-backend — Catalyst expressions when the model can compile the method
-(``*_to_spark_columns``), the LSH bucket join for approximate
-kneighbors, else ``FeaturewiseUfunc`` (one ``mapInArrow`` pass that
-skips NoData rows and scatters the nodata encoding back itself) with
-the model broadcast to executors once, not per task. Every backend
-builds its result through ``ufunc.output_frame``, so the output NoData
-registry is derived from the declared ``Output`` list in one place.
+first runs ``SparkEstimator._prepare``: it checks the fit, turns a
+DataFrame into a FeatureFrame and validates feature names. Then
+``SparkEstimator._apply`` picks a backend — Catalyst expressions when
+the model can compile the method (``*_to_spark_columns``), else
+``FeaturewiseUfunc`` (one ``mapInArrow`` pass that skips NoData rows and
+scatters the nodata encoding back itself) with the model broadcast to
+executors once, not per task. Approximate kneighbors takes the LSH
+bucket join instead of ``_apply``. Every backend builds its result
+through ``ufunc.output_frame``, so the output NoData registry is derived
+from the declared ``Output`` list in one place.
 
 The wrapped estimator is duck-typed (fit/predict/...); no sklearn
 import is required — any object with the method works, including the
@@ -245,38 +246,19 @@ class SparkEstimator:
 
     # -- the one apply path --------------------------------------------
 
-    def _apply(
+    def _prepare(
         self,
         ff: FeatureFrame | DataFrame,
         method: str,
-        outputs: list[Output],
-        features: Sequence[str] | None = None,
-        *,
+        features: Sequence[str] | None,
         fit_names: bool = True,
-        compile_expressions: bool = False,
-        lsh: bool = False,
-        count_collisions: bool = False,
-        method_kwargs: dict | None = None,
-        **ufunc_kwargs,
     ) -> FeatureFrame:
-        """Run ``estimator.<method>`` over ``ff`` into ``outputs``.
-
-        ``fit_names`` says whether the input columns are the fit-time
-        features: they name a DataFrame's features when ``features`` is
-        not given, and a FeatureFrame's features must match them. Off
-        for inverse_transform, whose inputs are transformed columns.
-
-        Backends, each producing the same NoData scatter-back:
-        - compiled: ``compile_expressions`` and the model has the
-          method's ``*_to_spark_columns`` hook — Catalyst expressions,
-          one ``when(mask, nodata).otherwise(expr)`` per output, whole-
-          stage codegen and no Python boundary;
-        - lsh: kneighbors as an LSH bucket join (``_kneighbors_lsh``);
-        - Arrow: otherwise — the model is broadcast once and
-          ``FeaturewiseUfunc`` runs ``model.<method>(X, **method_kwargs)``
-          per batch. ``count_collisions`` counts valid outputs equal to
-          a registered encoding into an accumulator that
-          ``warn_if_output_collisions`` reads."""
+        """Check the fit and the method, turn a DataFrame into a
+        FeatureFrame and check its feature names. ``fit_names`` says
+        whether the inputs are the fit-time features: they name a
+        DataFrame's features when ``features`` is not given, and a
+        FeatureFrame's features must match them. Off for
+        inverse_transform, whose inputs are transformed columns."""
         _require_fitted(self)
         _require_method(self.estimator, method)
         known = self.feature_names_in_ if fit_names else None
@@ -288,12 +270,39 @@ class SparkEstimator:
             ff = FeatureFrame.from_dataframe(ff, features)
         if fit_names:
             self._check_feature_names(ff.features)
+        return ff
 
-        hook = getattr(self.estimator, _COMPILED_HOOKS[method], None) if compile_expressions else None
-        if lsh:
-            df = self._kneighbors_lsh(ff, outputs, **ufunc_kwargs)
-            op = "kneighbors:lsh"
-        elif callable(hook):
+    def _apply(
+        self,
+        ff: FeatureFrame,
+        method: str,
+        outputs: list[Output],
+        ufunc_kwargs: dict,
+        *,
+        compile_expressions: bool = False,
+        count_collisions: bool = False,
+        method_kwargs: dict | None = None,
+    ) -> FeatureFrame:
+        """Run ``estimator.<method>`` over the prepared ``ff`` into
+        ``outputs``. ``ufunc_kwargs`` are the caller's
+        ``FeaturewiseUfunc.map_batches`` options, kept apart from the
+        backend controls so an unknown key fails there with a TypeError.
+
+        Backends, each producing the same NoData scatter-back:
+        - compiled: ``compile_expressions``, no ufunc options, and the
+          model has the method's ``*_to_spark_columns`` hook — Catalyst
+          expressions, one ``when(mask, nodata).otherwise(expr)`` per
+          output, whole-stage codegen and no Python boundary. The ufunc
+          options act inside the Arrow kernel, so passing any selects
+          the Arrow backend; collisions are never counted here;
+        - Arrow: otherwise — the model is broadcast once and
+          ``FeaturewiseUfunc`` runs ``model.<method>(X, **method_kwargs)``
+          per batch. ``count_collisions`` counts valid outputs equal to
+          a registered encoding into an accumulator that
+          ``warn_if_output_collisions`` reads."""
+        hook_name = _COMPILED_HOOKS.get(method) if compile_expressions and not ufunc_kwargs else None
+        hook = getattr(self.estimator, hook_name, None) if hook_name else None
+        if callable(hook):
             exprs = hook(list(ff.features))
             slots = [(n, o) for o in outputs for n in o.names]
             if len(exprs) != len(slots):
@@ -307,19 +316,17 @@ class SparkEstimator:
                     for e, (n, o) in zip(exprs, slots)
                 ),
             )
-            op = f"{method}:compiled"
-        else:
-            if count_collisions and any(o.registered_nodata() is not None for o in outputs):
-                ufunc_kwargs["collision_counter"] = ff.df.sparkSession.sparkContext.accumulator(0)
-            bc = ff.df.sparkSession.sparkContext.broadcast(self.estimator)
-            kw = method_kwargs or {}
+            return output_frame(df, outputs, ff, f"{method}:compiled")
+        if count_collisions and any(o.registered_nodata() is not None for o in outputs):
+            ufunc_kwargs["collision_counter"] = ff.df.sparkSession.sparkContext.accumulator(0)
+        bc = ff.df.sparkSession.sparkContext.broadcast(self.estimator)
+        kw = method_kwargs or {}
 
-            def kernel(X):
-                return getattr(bc.value, method)(X, **kw)
+        def kernel(X):
+            return getattr(bc.value, method)(X, **kw)
 
-            df = FeaturewiseUfunc(kernel, outputs).map_batches(ff, **ufunc_kwargs)
-            op = f"ufunc:{method}"
-        result = output_frame(df, outputs, ff, op)
+        df = FeaturewiseUfunc(kernel, outputs).map_batches(ff, **ufunc_kwargs)
+        result = output_frame(df, outputs, ff, f"ufunc:{method}")
         result._collision_acc = ufunc_kwargs.get("collision_counter")
         return result
 
@@ -341,7 +348,9 @@ class SparkEstimator:
         after any action on the result, ``warn_if_output_collisions``
         raises the reference's warning. (Execution is lazy, so the
         warning cannot fire before a job runs — the accumulator is the
-        Spark dual of the reference's in-kernel warn.)"""
+        Spark dual of the reference's in-kernel warn.) The compiled
+        backend does not count."""
+        ff = self._prepare(ff, "predict", features)
         kind = self._estimator_kind()
         dtype = "int" if kind in ("classifier", "clusterer") else "double"
         names = self.target_names_in_ if kind not in ("clusterer",) else ("cluster",)
@@ -350,28 +359,29 @@ class SparkEstimator:
             ff,
             "predict",
             [out],
-            features,
+            kw,
             compile_expressions=compile_expressions,
             count_collisions=check_output_for_nodata,
-            **kw,
         )
 
     def predict_proba(self, ff, features=None, nodata_output=None, **kw) -> FeatureFrame:
-        _require_method(self.estimator, "predict_proba")
+        ff = self._prepare(ff, "predict_proba", features)
         classes = getattr(self.estimator, "classes_", None)
         if classes is None:
             raise NotImplementedError("predict_proba requires fitted classes_")
         names = tuple(f"proba_{c}" for c in classes)
         out = Output(names, dtype="double", nodata=nodata_output)
-        return self._apply(ff, "predict_proba", [out], features, **kw)
+        return self._apply(ff, "predict_proba", [out], kw)
 
     def transform(self, ff, features=None, nodata_output=None, compile_expressions=True, **kw) -> FeatureFrame:
+        ff = self._prepare(ff, "transform", features)
         _require_method(self.estimator, "get_feature_names_out")
         names = tuple(map(str, self.estimator.get_feature_names_out()))
         out = Output(names, dtype="double", nodata=nodata_output)
-        return self._apply(ff, "transform", [out], features, compile_expressions=compile_expressions, **kw)
+        return self._apply(ff, "transform", [out], kw, compile_expressions=compile_expressions)
 
     def inverse_transform(self, ff, features=None, nodata_output=None, compile_expressions=True, **kw) -> FeatureFrame:
+        ff = self._prepare(ff, "inverse_transform", features, fit_names=False)
         if self.feature_names_in_ is not None:
             names = tuple(self.feature_names_in_)
         else:
@@ -381,10 +391,8 @@ class SparkEstimator:
             ff,
             "inverse_transform",
             [out],
-            features,
-            fit_names=False,
+            kw,
             compile_expressions=compile_expressions,
-            **kw,
         )
 
     # fit sets at or below this row count broadcast comfortably; larger
@@ -417,6 +425,7 @@ class SparkEstimator:
         """
         if method not in ("auto", "exact", "lsh"):
             raise ValueError(f"method must be auto/exact/lsh, got {method!r}")
+        ff = self._prepare(ff, "kneighbors", features)
         k = n_neighbors or getattr(self.estimator, "n_neighbors", 5)
         if method == "auto":
             n_fit = len(getattr(self.estimator, "_X", ()))
@@ -425,14 +434,14 @@ class SparkEstimator:
         dist_out = Output(tuple(f"dist_{i}" for i in range(1, k + 1)), "double")
         idx_out = Output(tuple(f"idx_{i}" for i in range(1, k + 1)), "int")
         outputs = [dist_out, idx_out] if return_distance else [idx_out]
+        if method == "lsh":
+            return output_frame(self._kneighbors_lsh(ff, outputs, **kw), outputs, ff, "kneighbors:lsh")
         return self._apply(
             ff,
             "kneighbors",
             outputs,
-            features,
-            lsh=method == "lsh",
+            kw,
             method_kwargs={"n_neighbors": k, "return_distance": return_distance},
-            **kw,
         )
 
     def _kneighbors_lsh(

@@ -156,6 +156,40 @@ def test_feature_name_validation(spark, sdf, train):
 
 
 @pytest.mark.parametrize("compile_expressions", [True, False])
+def test_ufunc_options_act_on_both_backends(spark, sdf, train, compile_expressions):
+    """A ufunc option is honored whatever compile_expressions says: the
+    options act inside the Arrow kernel, so passing one selects it."""
+    Xp, _ = train
+    est = SparkEstimator(StandardScalerNP()).fit(Xp)
+    ff = FeatureFrame.from_dataframe(sdf, FEATURES)
+    out = est.transform(ff, compile_expressions=compile_expressions, keep_features=True)
+    assert {*FEATURES, "scaled_0", "scaled_1", "scaled_2"} <= set(out.df.columns)
+
+
+def test_backend_controls_are_not_public_options(spark, sdf, train):
+    """The apply path's backend controls never leak through a public
+    method's **kw: an unknown key fails with the ufunc's TypeError
+    instead of switching a check or a backend."""
+    Xp, y = train
+    reg = SparkEstimator(LinearRegressionNP()).fit(Xp, y)
+    clf = SparkEstimator(GaussianNBNP()).fit(Xp, (y > y.median()).astype(int))
+    scaler = SparkEstimator(StandardScalerNP()).fit(Xp)
+    knn = SparkEstimator(KNeighborsRegressorNP(n_neighbors=2)).fit(Xp, y)
+    ff = FeatureFrame.from_dataframe(sdf, FEATURES)
+    calls = [
+        lambda: reg.predict(ff, fit_names=False),
+        lambda: scaler.transform(ff, lsh=True),
+        lambda: clf.predict_proba(ff, count_collisions=True),
+        lambda: clf.predict_proba(ff, compile_expressions=True),
+        lambda: knn.kneighbors(ff, method="exact", compile_expressions=True),
+        lambda: knn.kneighbors(ff, method="lsh", method_kwargs={}),
+    ]
+    for call in calls:
+        with pytest.raises(TypeError, match="unexpected keyword"):
+            call()
+
+
+@pytest.mark.parametrize("compile_expressions", [True, False])
 def test_inverse_transform_dataframe_needs_features(spark, sdf, train, compile_expressions):
     """inverse_transform's inputs are transformed columns, never the fit
     names: on a DataFrame that holds both, the fit names must not be
@@ -171,10 +205,17 @@ def test_inverse_transform_dataframe_needs_features(spark, sdf, train, compile_e
 
 
 def test_unfitted_raises(spark, sdf):
-    est = SparkEstimator(LinearRegressionNP())
     ff = FeatureFrame.from_dataframe(sdf, FEATURES)
-    with pytest.raises(NotFittedError):
-        est.predict(ff)
+    calls = [
+        lambda: SparkEstimator(LinearRegressionNP()).predict(ff),
+        lambda: SparkEstimator(GaussianNBNP()).predict_proba(ff),
+        lambda: SparkEstimator(StandardScalerNP()).transform(ff),
+        lambda: SparkEstimator(StandardScalerNP()).inverse_transform(ff),
+        lambda: SparkEstimator(KNeighborsRegressorNP()).kneighbors(ff),
+    ]
+    for call in calls:
+        with pytest.raises(NotFittedError):
+            call()
 
 
 def test_missing_method_raises(spark, sdf, train):
